@@ -6,14 +6,26 @@ the warehouse layers are parquet tables; batch jobs read them directly
 and Structured Streaming jobs replay them as file streams. Readers here
 keep scans declarative so Catalyst pushes filters/projections into the
 parquet scan (check via .explain: PushedFilters / ReadSchema).
+
+Every table load and stream-source schema peek goes through
+read_parquet, which infers a path's schema once and then reads with it
+supplied. Inference costs one Spark
+job (a footer read) per call, the fixed cost of every warehouse query's
+load; the memo keeps only the inferred StructType, keyed by the path,
+its file listing (so a table rewritten in place is inferred again) and
+the two confs that change inferred types.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -21,6 +33,58 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Confs that change the types parquet inference yields for the same
+# footer: a schema inferred under one setting is wrong under the other.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMA_MEMO_MAX = 256
+_SCHEMA_MEMO: OrderedDict[tuple, StructType] = OrderedDict()
+_SCHEMA_LOCK = threading.Lock()
+
+
+def _listing(path: str) -> tuple[tuple[str, int, int], ...]:
+    """Sorted (file, size, mtime_ns) of every file at or under path."""
+    files = [path] if os.path.isfile(path) else [
+        os.path.join(sub, name) for sub, _, names in os.walk(path) for name in names
+    ]
+    out = []
+    for f in sorted(files):
+        try:
+            st = os.stat(f)
+        except FileNotFoundError:
+            continue  # removed mid-walk; the listing differs either way
+        out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """spark.read.parquet(path) with the schema inferred once per
+    (path, file listing, type-changing confs): the first read infers
+    it as usual, and every later read supplies it, so it submits no
+    Spark job until executed.
+    Non-local schemes and paths that do not exist locally (globs, or
+    a missing table, which should raise Spark's own error) take the
+    plain read."""
+    url = urlparse(path)
+    local = path if url.scheme == "" else url.path
+    if url.scheme not in ("", "file") or not os.path.exists(local):
+        return spark.read.parquet(path)
+    key = (path, _listing(local), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    with _SCHEMA_LOCK:
+        schema = _SCHEMA_MEMO.get(key)
+        if schema is not None:
+            _SCHEMA_MEMO.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMA_LOCK:
+        _SCHEMA_MEMO[key] = df.schema
+        while len(_SCHEMA_MEMO) > _SCHEMA_MEMO_MAX:
+            _SCHEMA_MEMO.popitem(last=False)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -56,7 +120,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # required to read the TIMESTAMP(NANOS) column at all
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df

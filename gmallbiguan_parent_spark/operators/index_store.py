@@ -1337,16 +1337,23 @@ _SWEEP_MIN_AGE_S = 3600
 
 
 def _tree_max_mtime(d: str) -> float:
-    """Most recent mtime anywhere under d (dirs AND files). The
-    top-level dir mtime alone is NOT a liveness signal for a Spark
-    write in flight: task output lands under <d>/_temporary/... and
-    only job start and final commit touch the top level, so a foreign
-    publisher whose derivation runs longer than the sweep age would
-    look abandoned by the top-level mtime while its task files are
-    seconds old (ADVICE r12)."""
+    """Most recent mtime anywhere under d (dirs AND files), or the first
+    one found younger than _SWEEP_MIN_AGE_S: the sweep only asks whether
+    anything is recent, so the walk stops there. The top-level dir
+    mtime alone is NOT a liveness signal for a Spark write in flight:
+    task output lands under <d>/_temporary/... and only job start and
+    final commit touch the top level, so a foreign publisher whose
+    derivation runs longer than the sweep age would look abandoned by
+    the top-level mtime while its task files are seconds old
+    (ADVICE r12)."""
+    import time
+
+    recent = time.time() - _SWEEP_MIN_AGE_S
     newest = os.path.getmtime(d)
     for sub, dirs, files in os.walk(d):
         for name in dirs + files:
+            if newest > recent:
+                return newest
             try:
                 newest = max(newest, os.path.getmtime(os.path.join(sub, name)))
             except OSError:

@@ -13,8 +13,10 @@ The reference's 10 s tumbling windows become F.window(ts, ...) — width
 here is 10 minutes because the testdata event stream is sparser than an
 app log; the plan shape (event-time tumble + groupBy dims + exact
 countDistinct) is identical. Java Set-based distinct accumulation (A2)
-maps to countDistinct, which Spark executes as a partial/final two-phase
-aggregate (no driver-side set).
+maps to a two-level aggregate over one shuffle: rows hash-partitioned by
+sku, grouped per (sku, order), then per sku, so each distinct order
+counts once (no driver-side set, and no Expand copy of the rows that
+two countDistincts over different expressions would plan).
 """
 
 from __future__ import annotations
@@ -76,10 +78,13 @@ def product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2+J4: product stats with exact distinct order counts. The
     reference reduces 7 streams into per-sku windows, accumulating
     order-id Sets for exact distinct (RT/app/bean2/ProductStats.java:77-87)
-    then enriches 4 dims. Here: lineitem rolled up per part with
-    countDistinct(l_orderkey), then broadcast-joined to part dims —
-    aggregate FIRST, enrich AFTER, so the dim join runs on the small
-    aggregated side exactly like the reference
+    then enriches 4 dims. Here: lineitem rolled up per (part, order)
+    after one repartition by part, then per part, so order_ct and
+    refund_order_ct are plain counts over distinct orders (two
+    countDistincts over different expressions would plan an Expand
+    that triples the rows before the shuffle). The result is then
+    joined to part dims — aggregate FIRST, enrich AFTER, so the dim
+    join runs on the small aggregated side exactly like the reference
     (RT/app/dws2/ProductStatsApp.java:337-411). The part dim scales
     with the corpus, so its broadcast is Catalyst/AQE's call (VERDICT
     r8 #5): sub-threshold it broadcasts as before; at 100 TB both
@@ -87,16 +92,25 @@ def product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     right shape."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
-    agg = li.groupBy(F.col("l_partkey").alias("sku_id")).agg(
-        F.sum(F.col("l_quantity").cast("long")).alias("order_sku_num"),
-        F.sum(dec("l_extendedprice")).alias("order_amount"),
-        F.countDistinct("l_orderkey").alias("order_ct"),
-        F.sum(
-            F.when(F.col("l_returnflag") == "R", dec("l_extendedprice")).otherwise(F.lit(0).cast("decimal(18,4)"))
-        ).alias("refund_amount"),
-        F.countDistinct(
-            F.when(F.col("l_returnflag") == "R", F.col("l_orderkey"))
-        ).alias("refund_order_ct"),
+    per_order = (
+        li.repartition("l_partkey")
+        .groupBy("l_partkey", "l_orderkey")
+        .agg(
+            F.sum(F.col("l_quantity").cast("long")).alias("qty"),
+            F.sum(dec("l_extendedprice")).alias("amount"),
+            F.sum(
+                F.when(F.col("l_returnflag") == "R", dec("l_extendedprice"))
+                .otherwise(F.lit(0).cast("decimal(18,4)"))
+            ).alias("refund"),
+            F.max(F.col("l_returnflag") == "R").alias("has_r"),
+        )
+    )
+    agg = per_order.groupBy(F.col("l_partkey").alias("sku_id")).agg(
+        F.sum("qty").alias("order_sku_num"),
+        F.sum("amount").cast("decimal(28,4)").alias("order_amount"),
+        F.count("l_orderkey").alias("order_ct"),
+        F.sum("refund").cast("decimal(28,4)").alias("refund_amount"),
+        F.count(F.when(F.col("has_r"), F.col("l_orderkey"))).alias("refund_order_ct"),
     )
     return (
         agg.join(part, agg.sku_id == part.p_partkey, "left")

@@ -24,7 +24,8 @@ TUNED_MARKER = "spark.gmallbiguan.tuned"
 
 def runtime_confs(shuffle_partitions: int) -> tuple[tuple[str, str], ...]:
     """The runtime-settable SQL confs this engine wants on ANY session
-    it runs on — single source of truth for session.py and io.py."""
+    it runs on — single source of truth for get_spark's builder, its
+    re-apply on a reused session, and io.py."""
     return (
         ("spark.sql.shuffle.partitions", str(shuffle_partitions)),
         ("spark.sql.adaptive.enabled", "true"),
@@ -34,6 +35,8 @@ def runtime_confs(shuffle_partitions: int) -> tuple[tuple[str, str], ...]:
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
         ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
+        # events.parquet stores TIMESTAMP(NANOS), which the vectorized
+        # reader rejects; read it as long and convert in io.load_table.
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
     )
 
@@ -58,20 +61,11 @@ def get_spark(app_name: str = "gmallbiguan_parent_spark",
         SparkSession.builder
         .master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # events.parquet stores TIMESTAMP(NANOS) which the vectorized
-        # reader rejects; read as long and convert in io.load_table.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
+    for k, v in runtime_confs(n):
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # getOrCreate() ignores builder configs when a session already exists
     # (the per-round driver hands us its own plain session), so re-apply

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions import dec
-from ..io import load_table
+from ..io import load_table, read_parquet
 
 WINDOW = "10 minutes"
 WATERMARK = "3 seconds"     # ST1: bounded out-of-orderness, 3 s
@@ -55,7 +55,7 @@ def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     an EMPTY stream on multi-file datasets — the glob matched no leaf
     file name."""
     path = f"{sf_dir}/{table}.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     if os.path.isdir(path):
         return spark.readStream.schema(schema).parquet(path)
     return (
@@ -67,13 +67,13 @@ def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 def _events_stream(spark: SparkSession, sf_dir: str, glob: str = "events.parquet") -> DataFrame:
     """events as a file-source stream. Schema comes from a batch peek
-    (file sources need an explicit schema); the ns→µs conversion mirrors
+    (file sources need an explicit schema; io.read_parquet's memo makes
+    the peek free after the first); the ns→µs conversion mirrors
     io.load_table."""
     # required to read the TIMESTAMP(NANOS) column on a foreign session
     # (the driver's plain SparkSession) — same defensive set as io.load_table
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if glob == "events.parquet":
-        batch = spark.read.parquet(f"{sf_dir}/events.parquet")
         stream = _table_stream(spark, sf_dir, "events")
     else:
         # staged directories (sentinel builds) are always plain files
@@ -83,7 +83,7 @@ def _events_stream(spark: SparkSession, sf_dir: str, glob: str = "events.parquet
             .option("pathGlobFilter", glob)
             .parquet(sf_dir)
         )
-    if dict(batch.dtypes).get("ts") == "bigint":
+    if dict(stream.dtypes).get("ts") == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return stream
 

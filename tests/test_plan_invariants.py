@@ -32,3 +32,20 @@ def test_top_n_plans_as_take_ordered(spark):
     from gmallbiguan_parent_spark.pipelines.serving import top_trademarks
 
     assert "TakeOrderedAndProject" in _plan(top_trademarks(spark, SF))
+
+
+def test_product_stats_one_shuffle_no_expand(spark):
+    """Both distinct order counts come from one (part, order) grouping
+    over a single exchange on l_partkey; two countDistincts over
+    different expressions would instead plan an Expand that copies
+    every lineitem row before the shuffle."""
+    from gmallbiguan_parent_spark.pipelines.dws import product_stats
+
+    df = product_stats(spark, SF)
+    df.collect()
+    plan = _plan(df)
+    assert "isFinalPlan=true" in plan
+    plan = plan.split("== Initial Plan ==")[0]
+    assert "Expand" not in plan
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "Exchange hashpartitioning(l_partkey" in plan

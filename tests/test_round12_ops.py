@@ -154,6 +154,65 @@ def test_sweep_orphan_graph_dirs(tmp_path, monkeypatch):
     assert os.path.isdir(live)   # live foreign publisher: untouched
 
 
+def _stale_tree(root, fresh_leaf: bool) -> None:
+    """A dead-pid stage tree whose every entry is two hours old, except
+    (when fresh_leaf) one task file three levels down."""
+    import os
+    import time
+
+    deep = root / "_temporary" / "0" / "task_0"
+    deep.mkdir(parents=True)
+    (deep / "part-00000.parquet").write_bytes(b"x")
+    (root / "meta.json").write_text("{}")
+    old = time.time() - 7200
+    for sub, dirs, files in os.walk(root, topdown=False):
+        for name in files + dirs:
+            os.utime(os.path.join(sub, name), (old, old))
+    os.utime(root, (old, old))
+    if fresh_leaf:
+        now = time.time()
+        os.utime(deep / "part-00000.parquet", (now, now))
+
+
+def test_sweep_keeps_stale_tree_with_one_fresh_deep_file(tmp_path):
+    """_tree_max_mtime stops at the first recent entry; a fresh task
+    file deep under an otherwise two-hour-old stage still keeps it."""
+    import time
+
+    import gmallbiguan_parent_spark.operators.index_store as ix
+
+    path = str(tmp_path / "knn_graph_capped")
+    dead = tmp_path / "knn_graph_capped.build.999999999"
+    _stale_tree(dead, fresh_leaf=True)
+    assert time.time() - ix._tree_max_mtime(str(dead)) < 60
+    ix._sweep_orphan_graph_dirs(path)
+    assert dead.is_dir()
+
+
+def test_tree_max_mtime_stops_at_first_recent_entry(tmp_path, monkeypatch):
+    import os
+
+    import gmallbiguan_parent_spark.operators.index_store as ix
+
+    for i in range(50):
+        (tmp_path / f"part-{i:05d}.parquet").write_bytes(b"x")
+    calls = []
+    real = os.path.getmtime
+    monkeypatch.setattr(os.path, "getmtime", lambda p: calls.append(p) or real(p))
+    ix._tree_max_mtime(str(tmp_path))
+    assert len(calls) == 1   # the fresh top-level dir answers the question
+
+
+def test_sweep_removes_fully_stale_tree(tmp_path):
+    import gmallbiguan_parent_spark.operators.index_store as ix
+
+    path = str(tmp_path / "knn_graph_capped")
+    dead = tmp_path / "knn_graph_capped.build.999999999"
+    _stale_tree(dead, fresh_leaf=False)
+    ix._sweep_orphan_graph_dirs(path)
+    assert not dead.exists()
+
+
 def test_publish_graph_watermark_drift_retry(spark, tmp_path, monkeypatch):
     """ADVICE r11 TOCTOU: an ingest that lands mid-build must not get
     its watermark stamped onto a graph derived from the older corpus —
