@@ -8,24 +8,23 @@ keep scans declarative so Catalyst pushes filters/projections into the
 parquet scan (check via .explain: PushedFilters / ReadSchema).
 
 Every table load and stream-source schema peek goes through
-read_parquet, which infers a path's schema once and then reads with it
-supplied. Inference costs one Spark
-job (a footer read) per call, the fixed cost of every warehouse query's
-load; the memo keeps only the inferred StructType, keyed by the path,
-its file listing (so a table rewritten in place is inferred again) and
-the two confs that change inferred types.
+read_parquet, which infers a path's schema once per application and
+then reads with it supplied. Inference costs one Spark job (a footer
+read) per call, the fixed cost of every warehouse query's load. The
+inferred StructType is a session memo (memo.py) keyed by the path and
+the two confs that change inferred types, versioned by the path's file
+listing, so a table rewritten in place is inferred again.
 """
 
 from __future__ import annotations
 
 import os
-import threading
-from collections import OrderedDict
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+
+from .memo import session_memo
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -40,9 +39,6 @@ _SCHEMA_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
 )
-_SCHEMA_MEMO_MAX = 256
-_SCHEMA_MEMO: OrderedDict[tuple, StructType] = OrderedDict()
-_SCHEMA_LOCK = threading.Lock()
 
 
 def _listing(path: str) -> tuple[tuple[str, int, int], ...]:
@@ -62,9 +58,9 @@ def _listing(path: str) -> tuple[tuple[str, int, int], ...]:
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """spark.read.parquet(path) with the schema inferred once per
-    (path, file listing, type-changing confs): the first read infers
-    it as usual, and every later read supplies it, so it submits no
-    Spark job until executed.
+    (application, path, file listing, type-changing confs): the first
+    read infers it as usual, and every later read supplies it, so it
+    submits no Spark job until executed.
     Non-local schemes and paths that do not exist locally (globs, or
     a missing table, which should raise Spark's own error) take the
     plain read."""
@@ -72,19 +68,21 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     local = path if url.scheme == "" else url.path
     if url.scheme not in ("", "file") or not os.path.exists(local):
         return spark.read.parquet(path)
-    key = (path, _listing(local), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
-    with _SCHEMA_LOCK:
-        schema = _SCHEMA_MEMO.get(key)
-        if schema is not None:
-            _SCHEMA_MEMO.move_to_end(key)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
-    df = spark.read.parquet(path)
-    with _SCHEMA_LOCK:
-        _SCHEMA_MEMO[key] = df.schema
-        while len(_SCHEMA_MEMO) > _SCHEMA_MEMO_MAX:
-            _SCHEMA_MEMO.popitem(last=False)
-    return df
+    inferred = []
+
+    def infer():
+        inferred.append(spark.read.parquet(path))
+        return inferred[0].schema
+
+    schema = session_memo(
+        spark, "parquet_schema",
+        (path, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)),
+        infer,
+        version=_listing(local),
+    )
+    # a miss returns the inferring read itself: reading the path again
+    # with the schema supplied would list its files a second time
+    return inferred[0] if inferred else spark.read.schema(schema).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

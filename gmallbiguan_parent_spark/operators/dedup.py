@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table, load_table_spread
+from ..memo import session_memo
 
 # MinHash configuration: 15 permutations in 5 bands of 3 rows.
 # P(candidate | jaccard=j) = 1-(1-j^3)^5:
@@ -78,9 +79,6 @@ def _shingles(col):
     )
 
 
-_SHINGLE_SET_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, s: array<string>) shingle-set table, materialized ONCE
     per (application, corpus) — the shared build for every operator
@@ -89,16 +87,13 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the persisted set table the dedup pipeline maintains next to the
     corpus, so callers within one session share a single
     localCheckpoint instead of re-deriving it per query (the same
-    session-memo pattern as the IVF quantizer's _CENT_CACHE)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SHINGLE_SET_CACHE:
-        for k in [k for k in _SHINGLE_SET_CACHE if k[0] != key[0]]:
-            del _SHINGLE_SET_CACHE[k]
-        docs = load_table_spread(spark, sf_dir, "documents")
-        _SHINGLE_SET_CACHE[key] = docs.select(
+    session-memo pattern as the IVF quantizer)."""
+    return session_memo(
+        spark, "shingle_sets", sf_dir,
+        lambda: load_table_spread(spark, sf_dir, "documents").select(
             "doc_id", _shingles(F.col("text")).alias("s")
-        ).localCheckpoint()
-    return _SHINGLE_SET_CACHE[key]
+        ).localCheckpoint(),
+    )
 
 
 PREFIX_JACCARD_T = 0.6
@@ -113,9 +108,6 @@ PREFIX_NUM, PREFIX_DEN = 3, 5
 assert PREFIX_NUM / PREFIX_DEN == PREFIX_JACCARD_T
 
 
-_ORDERED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _ordered_token_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, arr: rarest-first-ordered tokens, n) — the prefix-
     filtering family's shared index (global token-frequency order +
@@ -123,14 +115,10 @@ def _ordered_token_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the shingle sets it derives from: both prefix_jaccard_pairs
     and containment_pairs read it, and at warehouse scale it IS the
     persisted ordered-postings table a set-similarity index maintains."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ORDERED_CACHE:
-        for k in [k for k in _ORDERED_CACHE if k[0] != key[0]]:
-            del _ORDERED_CACHE[k]
-        _ORDERED_CACHE[key] = _ordered_from_sets(
-            _shingle_sets(spark, sf_dir)
-        ).localCheckpoint()
-    return _ORDERED_CACHE[key]
+    return session_memo(
+        spark, "ordered_tokens", sf_dir,
+        lambda: _ordered_from_sets(_shingle_sets(spark, sf_dir)).localCheckpoint(),
+    )
 
 
 def _ordered_from_sets(sets: DataFrame) -> DataFrame:
@@ -1076,9 +1064,6 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     )
 
 
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _lsh_pairs_ck(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The confirmed near-dup pair table, materialized once per
     (application, corpus) — at warehouse scale this is the persisted
@@ -1088,12 +1073,10 @@ def _lsh_pairs_ck(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of re-running the LSH join + exact confirm each. The
     minhash_lsh_pairs gate query itself stays unmemoized so its own
     bench numbers keep timing the live computation."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAIRS_CACHE:
-        for k in [k for k in _PAIRS_CACHE if k[0] != key[0]]:
-            del _PAIRS_CACHE[k]
-        _PAIRS_CACHE[key] = minhash_lsh_pairs(spark, sf_dir).localCheckpoint()
-    return _PAIRS_CACHE[key]
+    return session_memo(
+        spark, "lsh_pairs", sf_dir,
+        lambda: minhash_lsh_pairs(spark, sf_dir).localCheckpoint(),
+    )
 
 
 def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1351,7 +1334,6 @@ SIMHASH_BAND_BITS = 16         # 4 bands of 16 bits → exact hamming<=3 cover
 # of 4. Both layouts are exact hamming<=3 covers by pigeonhole, and the
 # brute-force oracle verifies completeness independently of the layout.
 SIMHASH_WIDE_MIN_DOCS = 1_000_000
-_SIMHASH_CACHE: dict[tuple[str, str], tuple[DataFrame, int]] = {}
 # 64 bits → 6 blocks of 11/11/11/11/10/10 bits over (hi<<32)|lo
 _SIMHASH_BLOCKS = [(0, 10), (11, 21), (22, 32), (33, 43), (44, 53), (54, 63)]
 
@@ -1517,7 +1499,7 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str, wide: bool | None = 
     # don't recompute the vote folds and repeat callers don't re-derive
     # the table; at warehouse scale this is the persisted fingerprint
     # table the dedup pipeline maintains (same session-memo pattern as
-    # _SHINGLE_SET_CACHE). The cached doc count rides along for the
+    # the shingle sets). The cached doc count rides along for the
     # layout switch.
     sim, layout = _simhash_cached_fp(spark, sf_dir)
     return _simhash_pairs_from_fp(sim, layout if wide is None else wide)
@@ -1539,11 +1521,12 @@ def _simhash_cached_fp(spark: SparkSession, sf_dir: str):
             _read_artifact(spark, root, "simhash_fp"),
             read_manifest(root)["simhash_wide"],
         )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIMHASH_CACHE:
+
+    def build() -> tuple[DataFrame, int]:
         ck = simhash_fingerprint(spark, sf_dir).localCheckpoint()
-        _SIMHASH_CACHE[key] = (ck, ck.count())
-    sim, n_docs = _SIMHASH_CACHE[key]
+        return ck, ck.count()
+
+    sim, n_docs = session_memo(spark, "simhash_fp", sf_dir, build)
     return sim, n_docs >= SIMHASH_WIDE_MIN_DOCS
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..memo import session_memo
 
 PR_DAMP = 0.85
 PR_ITERS = 3
@@ -87,24 +88,17 @@ def supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session memo for the materialized adjacency (the _CENT_CACHE pattern:
-# immutable inputs => the checkpointed edge set is reusable across calls
-# in one session — bench cold+warm passes and repeated reports share it).
-_EDGE_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+# Session memo for the materialized adjacency (the trained-quantizer
+# pattern: immutable inputs => the checkpointed edge set is reusable
+# across calls in one session — bench cold+warm passes and repeated
+# reports share it).
 def _cached_adjacency(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGE_CACHE:
-        # evict entries from other (dead) applications — checkpointed
-        # DataFrames are context-bound and would otherwise pin storage
-        # (or dangle) across session restarts in one process
-        for k in [k for k in _EDGE_CACHE if k[0] != key[0]]:
-            del _EDGE_CACHE[k]
+    def build() -> tuple[DataFrame, DataFrame]:
         edges = _co_edges(spark, sf_dir).localCheckpoint()
         deg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).localCheckpoint()
-        _EDGE_CACHE[key] = (edges, deg)
-    return _EDGE_CACHE[key]
+        return edges, deg
+
+    return session_memo(spark, "graph_adjacency", sf_dir, build)
 
 
 def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -447,13 +441,10 @@ REACH_HOPS = 3
 
 
 # Session memo for the thresholded co-purchase pair-count table — the
-# _EDGE_CACHE pattern: the lineitem self-join + count is by far the
+# adjacency pattern: the lineitem self-join + count is by far the
 # most expensive step shared by lift/triangles/reach, and the support
 # >= TRI_MIN_SUPPORT result is catalog-bounded (~7k directed edges at
 # sf0.1 vs 2.4M raw pairs), so ONE localCheckpoint serves all three.
-_COPAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric (src, dst, support) part co-purchase pair counts at
     support >= TRI_MIN_SUPPORT, built once per (application, corpus).
@@ -461,14 +452,11 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     recommender maintains; in-session every consumer (lift's ranked
     pairs at >= LIFT_MIN_PAIR, triangles/reach's edge set) filters the
     same checkpoint instead of re-running the basket self-join."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _COPAIR_CACHE:
-        for k in [k for k in _COPAIR_CACHE if k[0] != key[0]]:
-            del _COPAIR_CACHE[k]
+    def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem")
         bridge = li.select("l_orderkey", "l_partkey").distinct()
         a0, b0 = bridge.alias("a0"), bridge.alias("b0")
-        _COPAIR_CACHE[key] = (
+        return (
             a0.join(b0, "l_orderkey")
             .filter(F.col("a0.l_partkey") != F.col("b0.l_partkey"))
             .groupBy(
@@ -478,7 +466,8 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("support") >= TRI_MIN_SUPPORT)
             .localCheckpoint()
         )
-    return _COPAIR_CACHE[key]
+
+    return session_memo(spark, "copurchase_pairs", sf_dir, build)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

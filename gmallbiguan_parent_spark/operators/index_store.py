@@ -2,10 +2,10 @@
 
 The dedup/ANN families build five derived tables — shingle sets,
 MinHash-LSH bands, SimHash fingerprints, IVF cell assignments, SRP
-signatures. Within one session those live as memoized localCheckpoints
-(_SHINGLE_SET_CACHE, _SIMHASH_CACHE, _CELLS_CACHE, …), but a fresh
-session rebuilds them from the raw corpus — at 100 TB a rebuild-per-job
-is not a plan. This module persists them as WRITTEN partitioned parquet
+signatures. Within one session those live as session-memoized
+localCheckpoints (memo.py), but a fresh session rebuilds them from the
+raw corpus — at 100 TB a rebuild-per-job is not a plan. This module
+persists them as WRITTEN partitioned parquet
 tables (the layout a warehouse maintains next to the corpus) plus a
 JSON manifest freezing the corpus-derived parameters:
 
@@ -52,7 +52,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table_spread
+from ..io import _listing, load_table_spread
+from ..memo import session_memo
 from .dedup import (
     N_BANDS,
     SIMHASH_WIDE_MIN_DOCS,
@@ -569,11 +570,6 @@ def refresh_index(
     return out
 
 
-# session memo of built store roots, keyed on (applicationId, sf_dir,
-# variant); SPARK_GRAFT_INDEX_DIR makes roots stable across sessions
-_ROOT_CACHE: dict[tuple[str, str, str], str] = {}
-
-
 _FAMILY_ARTIFACTS = {
     "docs": ("shingle_sets", "minhash_bands", "simhash_fp"),
     "vecs": _VEC_ARTIFACTS,
@@ -632,13 +628,16 @@ def ensure_index(
     remains an in-place maintenance job: run it from the single
     maintenance owner, not concurrently with other processes'
     first-use builds.)"""
+    return session_memo(
+        spark, "index_root", (sf_dir, variant),
+        lambda: _open_root(spark, sf_dir, variant, build_kwargs),
+    )
+
+
+def _open_root(spark: SparkSession, sf_dir: str, variant: str, build_kwargs: dict) -> str:
+    """ensure_index's memo miss: adopt, heal, or build and publish."""
     import shutil
 
-    key = (spark.sparkContext.applicationId, sf_dir, variant)
-    if key in _ROOT_CACHE:
-        return _ROOT_CACHE[key]
-    for k in [k for k in _ROOT_CACHE if k[0] != key[0]]:
-        del _ROOT_CACHE[k]
     base = os.environ.get("SPARK_GRAFT_INDEX_DIR")
     if base:
         root = _shared_root_path(base, sf_dir, variant)
@@ -719,7 +718,6 @@ def ensure_index(
                             shutil.rmtree(aside, ignore_errors=True)
     else:
         build_index(spark, sf_dir, root, **build_kwargs)
-    _ROOT_CACHE[key] = root
     return root
 
 
@@ -869,41 +867,6 @@ def _resume_ledger_compact(ledger: str) -> None:
     os.remove(marker)
 
 
-# staleness verdicts for persisted_root, keyed on (app, root, family,
-# corpus file signature) — NOT once-per-session (ADVICE r8: a corpus
-# that grows mid-session, or an external writer's append, must flip the
-# verdict on the NEXT query, or warm reads silently omit every
-# pair/neighbor involving the new rows). The signature is driver-side
-# os.stat over the corpus path — O(files) syscalls, no Spark job — so
-# any file added, replaced, or rewritten changes the key and forces one
-# fresh max() scan.
-_FRESH_CACHE: dict[tuple, bool] = {}
-
-
-def _corpus_signature(sf_dir: str, table: str) -> tuple:
-    path = f"{sf_dir}/{table}.parquet"
-    try:
-        st = os.stat(path)
-    except OSError:
-        return (table, "missing")
-    if not os.path.isdir(path):
-        return (table, st.st_mtime_ns, st.st_size)
-    # recursive walk, not a first-level listing (r9 self-review): a
-    # partitioned layout rewrites files INSIDE date=X/ subdirectories,
-    # and a directory's own mtime only changes on entry create/delete/
-    # rename — stat every file so an in-place rewrite flips the key
-    sig = [table]
-    for d, _subdirs, files in sorted(os.walk(path)):
-        for name in sorted(files):
-            try:
-                s = os.stat(os.path.join(d, name))
-            except OSError:
-                continue
-            sig.append((os.path.relpath(os.path.join(d, name), path),
-                        s.st_mtime_ns, s.st_size))
-    return tuple(sig)
-
-
 def persisted_root(spark: SparkSession, sf_dir: str, family: str) -> str | None:
     """The opportunistic warm-path switch for the BASE neardup/ANN
     queries (VERDICT r7 #7): when SPARK_GRAFT_INDEX_DIR is set, default
@@ -954,29 +917,30 @@ def persisted_root(spark: SparkSession, sf_dir: str, family: str) -> str | None:
         if family == "vecs"
         else ("documents", "doc_id", "doc_watermark")
     )
-    key = (
-        spark.sparkContext.applicationId, root, family,
-        _corpus_signature(sf_dir, table),
-    )
-    if key not in _FRESH_CACHE:
-        # evict other sessions' keys AND this (app, root, family)'s
-        # superseded signatures — without the prefix eviction a
-        # frequently-appended corpus leaks one O(file-count) tuple per
-        # mutation for the session's lifetime (r9 self-review)
-        for k in [
-            k for k in _FRESH_CACHE
-            if k[0] != key[0] or k[:3] == key[:3]
-        ]:
-            del _FRESH_CACHE[k]
+
+    def fresh() -> bool:
         cur = load_table_spread(spark, sf_dir, table).agg(F.max(id_col)).first()[0]
-        _FRESH_CACHE[key] = cur is None or cur <= m[wm_key]
-    return root if _FRESH_CACHE[key] else None
+        return cur is None or cur <= m[wm_key]
+
+    # the verdict is NOT once-per-session (ADVICE r8: a corpus that
+    # grows mid-session, or an external writer's append, must flip it
+    # on the NEXT query, or warm reads silently omit every
+    # pair/neighbor involving the new rows). Its version is the
+    # corpus's recursive file listing — os.stat in this process, no Spark
+    # job — so any file added, replaced, or rewritten in place (even
+    # inside a date=X/ subdirectory) forces one fresh max() scan, and
+    # the new verdict replaces the superseded one
+    listing = (table, _listing(f"{sf_dir}/{table}.parquet"))
+    is_fresh = session_memo(spark, "fresh", (root, family), fresh, version=listing)
+    return root if is_fresh else None
 
 
 _VEC_ARTIFACT_SET = set(_VEC_ARTIFACTS)
 
 
-def _read_artifact(spark: SparkSession, root: str, name: str) -> DataFrame:
+def _read_artifact(
+    spark: SparkSession, root: str, name: str, m: dict | None = None
+) -> DataFrame:
     """Watermark-filtered artifact read: only ingest partitions at or
     below the manifest watermark are COMMITTED — a concurrent or
     crashed refresh's higher-tagged partitions are invisible to
@@ -985,7 +949,7 @@ def _read_artifact(spark: SparkSession, root: str, name: str) -> DataFrame:
     the destructive heal runs only inside refresh_index, which — like
     compact_index — is a single-owner maintenance job."""
     wm_key = "vec_watermark" if name in _VEC_ARTIFACT_SET else "doc_watermark"
-    wm = read_manifest(root)[wm_key]
+    wm = (m or read_manifest(root))[wm_key]
     return spark.read.parquet(f"{root}/{name}").filter(F.col("ingest") <= wm)
 
 
@@ -1206,18 +1170,23 @@ def embedding_neardup_pairs_from_index(spark: SparkSession, sf_dir: str) -> Data
 
 
 def _wide_sigs_from_store(spark: SparkSession, sf_dir: str):
-    """(sigs, masks) from the persisted wide signature layout — THE
-    store-read path shared by every wide from_index twin and by
+    """(sigs, masks, source) from the persisted wide signature layout —
+    THE store-read path shared by every wide from_index twin and by
     similarity._srp_wide_sigs' warm branch, so a change to the wide
     artifact's columns or mask derivation happens in exactly one
-    place."""
+    place. source = `store:{root}:{vec_watermark}` is the memo tag of
+    these rows: the filter, the masks and the tag come from ONE
+    manifest read, so a refresh committing between reads can never
+    stamp one watermark onto rows filtered at another."""
     from .similarity import SRP_WIDE_RADIUS, _srp_probe_masks
 
     root = ensure_index(spark, sf_dir)
-    sigs = _read_artifact(spark, root, "srp_sigs_wide").select(
+    m = read_manifest(root)
+    sigs = _read_artifact(spark, root, "srp_sigs_wide", m).select(
         "vec_id", "v", "table_id", "sig"
     )
-    return sigs, _srp_probe_masks(read_manifest(root)["srp_bits"], SRP_WIDE_RADIUS)
+    masks = _srp_probe_masks(m["srp_bits"], SRP_WIDE_RADIUS)
+    return sigs, masks, f"store:{root}:{m['vec_watermark']}"
 
 
 def _slim_wide_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1229,14 +1198,6 @@ def _slim_wide_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _read_artifact(spark, root, "srp_sigs_wide").select(
         "vec_id", "table_id", "sig", "rs"
     )
-
-
-def _store_source_tag(spark: SparkSession, sf_dir: str) -> str:
-    """The memo source tag of the persisted wide sigs — resolved root +
-    manifest vec watermark, so a repointed SPARK_GRAFT_INDEX_DIR or a
-    refreshed store mints a fresh key (the _knn_slim_memo discipline)."""
-    root = ensure_index(spark, sf_dir)
-    return f"store:{root}:{read_manifest(root)['vec_watermark']}"
 
 
 def embedding_neardup_wide_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1253,10 +1214,8 @@ def embedding_neardup_wide_from_index(spark: SparkSession, sf_dir: str) -> DataF
         NEARDUP_COSINE, _mp_confirmed_memo, _multiprobe_pairs_from,
     )
 
-    sigs, masks = _wide_sigs_from_store(spark, sf_dir)
-    conf = _mp_confirmed_memo(
-        spark, sf_dir, f"wide:{_store_source_tag(spark, sf_dir)}", sigs, masks
-    )
+    sigs, masks, source = _wide_sigs_from_store(spark, sf_dir)
+    conf = _mp_confirmed_memo(spark, sf_dir, f"wide:{source}", sigs, masks)
     return _multiprobe_pairs_from(sigs, masks, NEARDUP_COSINE, confirmed=conf)
 
 
@@ -1267,10 +1226,8 @@ def knn_graph_wide_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_knn_graph_from_sigs), same oracle as the in-session form."""
     from .similarity import _knn_graph_from_sigs, _mp_confirmed_memo
 
-    sigs, masks = _wide_sigs_from_store(spark, sf_dir)
-    conf = _mp_confirmed_memo(
-        spark, sf_dir, f"wide:{_store_source_tag(spark, sf_dir)}", sigs, masks
-    )
+    sigs, masks, source = _wide_sigs_from_store(spark, sf_dir)
+    conf = _mp_confirmed_memo(spark, sf_dir, f"wide:{source}", sigs, masks)
     return _knn_graph_from_sigs(sigs, masks, confirmed=conf)
 
 
@@ -1283,7 +1240,7 @@ def knn_graph_capped_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle as the in-session form."""
     from .similarity import KNN_CAND_CAP, _knn_graph_capped_from_sigs
 
-    sigs, masks = _wide_sigs_from_store(spark, sf_dir)
+    sigs, masks, _source = _wide_sigs_from_store(spark, sf_dir)
     return _knn_graph_capped_from_sigs(
         sigs, masks, KNN_CAND_CAP,
         slim=_slim_wide_from_store(spark, sf_dir),
@@ -1512,7 +1469,7 @@ def semantic_decontaminate_band_from_index(
         SEM_DECON_BAND_DROP, SEM_DECON_BAND_REVIEW, _sem_decon_wide_from_sigs,
     )
 
-    sigs, masks = _wide_sigs_from_store(spark, sf_dir)
+    sigs, masks, _source = _wide_sigs_from_store(spark, sf_dir)
     return _sem_decon_wide_from_sigs(
         sigs, masks,
         review_cosine=SEM_DECON_BAND_REVIEW,
@@ -1530,7 +1487,7 @@ def semantic_decontaminate_wide_from_index(
     form."""
     from .similarity import _sem_decon_wide_from_sigs
 
-    sigs, masks = _wide_sigs_from_store(spark, sf_dir)
+    sigs, masks, _source = _wide_sigs_from_store(spark, sf_dir)
     return _sem_decon_wide_from_sigs(sigs, masks)
 
 

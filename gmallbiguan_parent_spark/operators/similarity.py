@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table, load_table_spread
+from ..memo import session_memo
 
 N_QUERIES = 8     # vec_id < 8 are the query vectors
 TOP_K = 5
@@ -290,12 +291,6 @@ def _probe_cells(queries: DataFrame, cent: list[tuple[int, list[float]]], nprobe
     )
 
 
-# Per-session training memo: the quantizer is deterministic in
-# (corpus, constants), so ann_ivf_topk / ann_ivf_multiprobe and the
-# bench's cold+warm passes share one training run.
-_CENT_CACHE: dict[tuple[str, str], list[tuple[int, list[float]]]] = {}
-
-
 def _seq_dot_rows(mat, v):
     """Row-wise dot(mat[i], v) with SEQUENTIAL left-fold summation:
     np.cumsum's partials are defined as prev + x (it cannot be pairwise
@@ -421,15 +416,10 @@ def _ivf_centroids_spec(sample_vecs: list[list[float]], nlist: int) -> list[tupl
 
 
 def _ivf_cached_centroids(spark: SparkSession, sf_dir: str, corpus: DataFrame):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CENT_CACHE:
-        for k in [k for k in _CENT_CACHE if k[0] != key[0]]:
-            del _CENT_CACHE[k]
-        _CENT_CACHE[key] = _ivf_centroids(spark, corpus)
-    return _CENT_CACHE[key]
-
-
-_CELLS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+    """Per-session training memo: the quantizer is deterministic in
+    (corpus, constants), so ann_ivf_topk / ann_ivf_multiprobe and the
+    bench's cold+warm passes share one training run."""
+    return session_memo(spark, "ivf_centroids", sf_dir, lambda: _ivf_centroids(spark, corpus))
 
 
 def _cached_cells(spark: SparkSession, sf_dir: str, corpus: DataFrame, cent) -> DataFrame:
@@ -439,17 +429,16 @@ def _cached_cells(spark: SparkSession, sf_dir: str, corpus: DataFrame, cent) -> 
     so the five IVF consumers in one session share a single
     localCheckpoint of the assignment instead of re-running the
     nlist-way scoring crossJoin per query (same session-memo pattern as
-    _CENT_CACHE). The centroid fingerprint in the key means a caller
-    with different centroids for the same corpus gets a fresh
-    assignment, never a stale one (advisor finding); entries from dead
-    applications are evicted so checkpoint blocks don't pin storage."""
+    the trained centroids). The centroid fingerprint is the memo
+    version: a caller with different centroids for the same corpus gets
+    a fresh assignment, never a stale one (advisor finding), and the
+    old assignment is dropped rather than kept beside it."""
     cent_fp = hashlib.md5(repr(cent).encode()).hexdigest()[:16]
-    key = (spark.sparkContext.applicationId, sf_dir, cent_fp)
-    if key not in _CELLS_CACHE:
-        for k in [k for k in _CELLS_CACHE if k[0] != key[0] or (k[1] == sf_dir and k[2] != cent_fp)]:
-            del _CELLS_CACHE[k]
-        _CELLS_CACHE[key] = _assign_cells(corpus, cent).localCheckpoint()
-    return _CELLS_CACHE[key]
+    return session_memo(
+        spark, "ivf_cells", sf_dir,
+        lambda: _assign_cells(corpus, cent).localCheckpoint(),
+        version=cent_fp,
+    )
 
 
 def _ivf_corpus_queries(spark: SparkSession, sf_dir: str):
@@ -1001,52 +990,43 @@ def _srp_signature(v, table: int, bits: int):
     return sig
 
 
-_SRP_SIGS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_EMB_COUNT_CACHE: dict[tuple[str, str], int] = {}
-
-
 def _emb_count(spark: SparkSession, sf_dir: str) -> int:
     """Corpus cardinality for width derivation, memoized per
     (application, corpus) — the embeddings parquet is immutable within
     a session, but the radius multiprobe re-ran the count job on every
     call just to re-derive the same frozen signature width."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EMB_COUNT_CACHE:
-        for k in [k for k in _EMB_COUNT_CACHE if k[0] != key[0]]:
-            del _EMB_COUNT_CACHE[k]
-        from ..io import load_table_spread
-
-        _EMB_COUNT_CACHE[key] = load_table_spread(spark, sf_dir, "embeddings").count()
-    return _EMB_COUNT_CACHE[key]
+    return session_memo(
+        spark, "emb_count", sf_dir,
+        lambda: load_table_spread(spark, sf_dir, "embeddings").count(),
+    )
 
 
 def _srp_signature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, v, table_id, sig) for every vector × SRP table, width
     derived from the corpus count, materialized once PER (application,
-    corpus) — the _SHINGLE_SET_CACHE session-memo discipline (r12: each
+    corpus) — the shingle-set session-memo discipline (r12: each
     call used to re-count the corpus and re-localCheckpoint the full
     table, so every warm consumer paid the build again and each call
     leaked another checkpoint into the block manager). At warehouse
     scale this IS the persisted signature table. Shared by
     embedding_neardup_pairs, knn_graph, and the radius multiprobes."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SRP_SIGS_CACHE:
-        for k in [k for k in _SRP_SIGS_CACHE if k[0] != key[0]]:
-            del _SRP_SIGS_CACHE[k]
+
+    def build() -> DataFrame:
         emb = load_table_spread(spark, sf_dir, "embeddings")
         corpus = emb.select(
             F.col("vec_id"),
             F.col("embedding").cast("array<double>").alias("v"),
         )
         bits = srp_bits_for(_emb_count(spark, sf_dir))
-        _SRP_SIGS_CACHE[key] = corpus.select(
+        return corpus.select(
             "vec_id", "v",
             F.explode(F.array(*[
                 F.struct(F.lit(t).alias("table_id"), _srp_signature(F.col("v"), t, bits).alias("sig"))
                 for t in range(SRP_TABLES)
             ])).alias("b"),
         ).select("vec_id", "v", "b.table_id", "b.sig").localCheckpoint()
-    return _SRP_SIGS_CACHE[key]
+
+    return session_memo(spark, "srp_sigs", sf_dir, build)
 
 
 KNN_GRAPH_K = 3
@@ -1201,9 +1181,6 @@ def _rank_sketch(v):
     return sig
 
 
-_KNN_SLIM_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _knn_slim_memo(
     spark: SparkSession, sf_dir: str, source: str, sigs: DataFrame
 ) -> DataFrame:
@@ -1217,32 +1194,25 @@ def _knn_slim_memo(
     _slim_wide_from_store), so this memo serves the LIVE branch.
     live and store entries coexist (ADVICE r12: a session alternating
     a live-branch call with a from_index twin must not thrash the
-    corpus-sized checkpoint); only SUPERSEDED store keys of the same
-    corpus are evicted — each store refresh/repoint mints a new
-    watermark-stamped key, and keeping the old entry would pin one
-    corpus-sized checkpoint per refresh cycle in the block manager
+    corpus-sized checkpoint): they are separate slots, and the source
+    is the version, so a store refresh/repoint (a new watermark-stamped
+    source) replaces the store slot — keeping the old entry would pin
+    one corpus-sized checkpoint per refresh cycle in the block manager
     forever."""
-    key = (spark.sparkContext.applicationId, sf_dir, source)
-    if key not in _KNN_SLIM_CACHE:
-        for k in [
-            k for k in _KNN_SLIM_CACHE
-            if k[0] != key[0]
-            or (
-                k[1] == sf_dir and k[2] != source
-                and k[2].startswith("store:") and source.startswith("store:")
-            )
-        ]:
-            del _KNN_SLIM_CACHE[k]
+
+    def build() -> DataFrame:
         rsk = (
             sigs.filter(F.col("table_id") == 0)
             .select("vec_id", _rank_sketch(F.col("v")).alias("rs"))
         )
-        _KNN_SLIM_CACHE[key] = (
+        return (
             sigs.select("vec_id", "table_id", "sig")
             .join(rsk, "vec_id")
             .localCheckpoint(eager=False)
         )
-    return _KNN_SLIM_CACHE[key]
+
+    kind = "store" if source.startswith("store:") else "live"
+    return session_memo(spark, "knn_slim", (sf_dir, kind), build, version=source)
 
 
 def knn_graph_wide_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1582,7 +1552,7 @@ def _mp_confirmed_pairs(sigs: DataFrame, masks: list[int]) -> DataFrame:
 
 
 # session memo of the confirmed multiprobe pair relation, keyed on
-# (applicationId, corpus, layout:source) — r13: the probe join +
+# (corpus, layout, live|store) — r13: the probe join +
 # distinct + double vector join ran once PER CALL although the relation
 # is a pure function of (sigs, masks), both frozen within a session for
 # a session-stable source; with 2 radius consumers, 3+ wide consumers
@@ -1591,9 +1561,6 @@ def _mp_confirmed_pairs(sigs: DataFrame, masks: list[int]) -> DataFrame:
 # scale this relation is the near-dup PAIR TABLE a deployment
 # materializes once per corpus watermark (the knn_graph_capped
 # published-artifact argument, one level down).
-_MP_CONF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _mp_confirmed_memo(
     spark: SparkSession, sf_dir: str, tag: str, sigs: DataFrame, masks: list[int]
 ) -> DataFrame:
@@ -1601,27 +1568,18 @@ def _mp_confirmed_memo(
     tag = '<layout>:<source>' — layout separates the radius form's
     (4-table, hamming<=r) relation from the wide form's; source is the
     _srp_wide_sigs_tagged provenance so a store refresh/repoint mints a
-    fresh key. Callers with per-run signature sources (the streaming
+    fresh version. Callers with per-run signature sources (the streaming
     ingest twins, the planted fixtures' augmented corpus — which has
     its own stable tag) must pass a tag that matches the sigs actually
-    handed in. live and one store entry coexist (the _KNN_SLIM_CACHE
-    policy); superseded store keys of the same corpus are evicted."""
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    if key not in _MP_CONF_CACHE:
-        for k in [
-            k for k in _MP_CONF_CACHE
-            if k[0] != key[0]
-            or (
-                k[1] == sf_dir and k[2] != tag
-                and ":store:" in k[2] and ":store:" in tag
-                and k[2].split(":", 1)[0] == tag.split(":", 1)[0]
-            )
-        ]:
-            del _MP_CONF_CACHE[k]
-        _MP_CONF_CACHE[key] = _mp_confirmed_pairs(sigs, masks).localCheckpoint(
-            eager=False
-        )
-    return _MP_CONF_CACHE[key]
+    handed in. live and one store entry of each layout coexist (the
+    _knn_slim_memo policy); a new store tag supersedes the old one."""
+    layout, source = tag.split(":", 1)
+    kind = "store" if source.startswith("store:") else "live"
+    return session_memo(
+        spark, "mp_confirmed", (sf_dir, layout, kind),
+        lambda: _mp_confirmed_pairs(sigs, masks).localCheckpoint(eager=False),
+        version=tag,
+    )
 
 
 def _multiprobe_pairs_from(
@@ -1652,9 +1610,6 @@ def embedding_neardup_multiprobe_band(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-_WIDE_SIGS_CACHE: dict[tuple[str, str], tuple[DataFrame, list[int]]] = {}
-
-
 def _srp_wide_sigs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[int]]:
     """(sigs, masks) for the WIDE governor layout — see
     _srp_wide_sigs_tagged for the branch logic; consumers that don't
@@ -1681,40 +1636,32 @@ def _srp_wide_sigs_tagged(
     persisted_root decision that picked the branch (ADVICE r12: a
     second independent persisted_root call could flip between the sig
     resolution and the memo-key derivation, caching store-derived rows
-    under the live key), so source-keyed memos always describe the
-    relation they hold."""
-    from ..io import load_table_spread
-    from .index_store import persisted_root
+    under the live key), and on the store branch from the same manifest
+    read whose watermark filtered the rows, so source-keyed memos
+    always describe the relation they hold."""
+    from .index_store import _wide_sigs_from_store, persisted_root
 
     if persisted_root(spark, sf_dir, "vecs"):
         # warm environment: persisted_root runs through ensure_index,
         # whose layout guard rebuilds any pre-r13 store — a non-None
         # root always carries the current wide artifact
-        from .index_store import (
-            _wide_sigs_from_store, ensure_index, read_manifest,
-        )
-
-        sigs, masks = _wide_sigs_from_store(spark, sf_dir)
-        root = ensure_index(spark, sf_dir)
-        return sigs, masks, f"store:{root}:{read_manifest(root)['vec_watermark']}"
-    # live path memoized per (application, corpus) — the
-    # _SHINGLE_SET_CACHE discipline (r12): six wide-layout consumers
-    # each re-counted the corpus and re-materialized the checkpoint per
-    # CALL, so bench warm passes paid the full sig build again and the
-    # session accumulated one orphan checkpoint per query run.
+        return _wide_sigs_from_store(spark, sf_dir)
+    # live path memoized per (application, corpus) — the shingle-set
+    # discipline (r12): six wide-layout consumers each re-counted the
+    # corpus and re-materialized the checkpoint per CALL, so bench warm
+    # passes paid the full sig build again and the session accumulated
+    # one orphan checkpoint per query run.
     # persisted_root's own (session, corpus-signature) freshness memo
     # guards the store-vs-live branch above; the live memo keys the same
     # way and a corpus swap means a new sf_dir in this harness.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WIDE_SIGS_CACHE:
-        for k in [k for k in _WIDE_SIGS_CACHE if k[0] != key[0]]:
-            del _WIDE_SIGS_CACHE[k]
+
+    def build() -> tuple[DataFrame, list[int]]:
         emb = load_table_spread(spark, sf_dir, "embeddings")
-        corpus = emb.select(
+        return _wide_sigs_live(emb.select(
             F.col("vec_id"), F.col("embedding").cast("array<double>").alias("v")
-        )
-        _WIDE_SIGS_CACHE[key] = _wide_sigs_live(corpus)
-    sigs, masks = _WIDE_SIGS_CACHE[key]
+        ))
+
+    sigs, masks = session_memo(spark, "wide_sigs", sf_dir, build)
     return sigs, masks, "live"
 
 
@@ -2077,26 +2024,19 @@ def _decon_planted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # session memo of the plant-augmented wide sigs shared by BOTH planted
-# gate fixtures (near-dup band + decontamination band), keyed on
-# (applicationId, corpus): each call used to re-count the augmented
-# corpus and re-localCheckpoint its signature table — one full rebuild
+# gate fixtures (near-dup band + decontamination band), keyed on the
+# corpus: each call used to re-count the augmented corpus and
+# re-localCheckpoint its signature table — one full rebuild
 # plus one leaked block-manager checkpoint per gate replay (r13; the
-# plants are a pure derivation of the immutable corpus, so the
-# _WIDE_SIGS_CACHE discipline applies verbatim).
-_PLANTED_WIDE_CACHE: dict[tuple[str, str], tuple[DataFrame, list[int]]] = {}
-
-
+# plants are a pure derivation of the immutable corpus, so the live
+# wide-sigs discipline applies verbatim).
 def _planted_wide_sigs(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[int]]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PLANTED_WIDE_CACHE:
-        for k in [k for k in _PLANTED_WIDE_CACHE if k[0] != key[0]]:
-            del _PLANTED_WIDE_CACHE[k]
-        _PLANTED_WIDE_CACHE[key] = _wide_sigs_live(
-            _decon_planted_corpus(spark, sf_dir)
-        )
-    return _PLANTED_WIDE_CACHE[key]
+    return session_memo(
+        spark, "planted_wide_sigs", sf_dir,
+        lambda: _wide_sigs_live(_decon_planted_corpus(spark, sf_dir)),
+    )
 
 
 def semantic_decontaminate_band_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2280,12 +2220,8 @@ def _pq_codebooks_spec(sample: list[tuple[int, list[float]]]) -> list[list[tuple
     return books
 
 
-_PQ_CACHE: dict[tuple[str, str], list[list[tuple[int, list[float]]]]] = {}
-
-
 def _pq_cached_codebooks(spark: SparkSession, sf_dir: str, corpus: DataFrame):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_CACHE:
+    def build():
         n = corpus.count()
         mod = pq_train_mod(n)
         rows = (
@@ -2294,8 +2230,9 @@ def _pq_cached_codebooks(spark: SparkSession, sf_dir: str, corpus: DataFrame):
             .collect()
         )
         sample = sorted((int(r.corpus_id), [float(x) for x in r.c_emb]) for r in rows)
-        _PQ_CACHE[key] = _pq_codebooks_spec(sample)
-    return _PQ_CACHE[key]
+        return _pq_codebooks_spec(sample)
+
+    return session_memo(spark, "pq_codebooks", sf_dir, build)
 
 
 def _l2_6(a, b):
@@ -2363,9 +2300,6 @@ def _pq_recon_expr(books: list[list[tuple[int, list[float]]]]):
     return F.concat(*recon_parts)
 
 
-_PQ_ENC_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _pq_encoded_cells(
     spark: SparkSession, sf_dir: str, corpus: DataFrame, cent, books
 ) -> DataFrame:
@@ -2379,15 +2313,13 @@ def _pq_encoded_cells(
     ann_ivfpq_topk probed cells) into a cheap read, exactly like the
     persisted PQ codes of a FAISS index."""
     fp = hashlib.md5((repr(cent) + repr(books)).encode()).hexdigest()[:16]
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if key not in _PQ_ENC_CACHE:
-        for k in [k for k in _PQ_ENC_CACHE if k[0] != key[0] or (k[1] == sf_dir and k[2] != fp)]:
-            del _PQ_ENC_CACHE[k]
-        cells = _cached_cells(spark, sf_dir, corpus, cent)
-        _PQ_ENC_CACHE[key] = cells.withColumn(
+    return session_memo(
+        spark, "pq_encoded_cells", sf_dir,
+        lambda: _cached_cells(spark, sf_dir, corpus, cent).withColumn(
             "r_emb", _pq_recon_expr(books)
-        ).localCheckpoint()
-    return _PQ_ENC_CACHE[key]
+        ).localCheckpoint(),
+        version=fp,
+    )
 
 
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2753,12 +2685,6 @@ def sq8_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# session memo of the PCA covariance cells, keyed on (applicationId,
-# corpus) — 64x64 rounded cells, the only corpus-scale pass of the
-# power iteration
-_PCA_COV_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def embedding_principal_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant principal component of the embedding corpus via POWER
     ITERATION over the covariance matrix — the whitening/decorrelation
@@ -2813,15 +2739,10 @@ def embedding_principal_component(spark: SparkSession, sf_dir: str) -> DataFrame
     # checkpoint the 4096 cells — every matvec iteration re-reads C,
     # and without the checkpoint each of the PCA_ITERS rounds would
     # replay the corpus-scale aggregate. Memoized per (application,
-    # corpus) since r13 (the _SRP_SIGS_CACHE discipline): C is a pure
-    # function of the immutable corpus, and rebuilding the one
+    # corpus) since r13 (the SRP signature-table discipline): C is a
+    # pure function of the immutable corpus, and rebuilding the one
     # corpus-scale pass per CALL was the query's whole warm cost.
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    if ck not in _PCA_COV_CACHE:
-        for k in [k for k in _PCA_COV_CACHE if k[0] != ck[0]]:
-            del _PCA_COV_CACHE[k]
-        _PCA_COV_CACHE[ck] = cov.localCheckpoint()
-    cov = _PCA_COV_CACHE[ck]
+    cov = session_memo(spark, "pca_cov", sf_dir, cov.localCheckpoint)
     # v0 = e_1 (unit basis vector)
     v = spark.range(d).select(
         F.col("id").cast("int").alias("j"),

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions import tokenize
 from ..io import load_table, load_table_spread
+from ..memo import session_memo
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
 
@@ -1101,19 +1102,13 @@ def bpe_train_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("step")
 
 
-_BPE_BATCH_CACHE: dict[tuple[str, str], tuple[list, DataFrame]] = {}
-
-
 def _bpe_train_batched(spark: SparkSession, sf_dir: str):
     """Memoized batched training over the corpus vocabulary (same
     session-memo pattern as _bpe_train)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BPE_BATCH_CACHE:
-        for k in [k for k in _BPE_BATCH_CACHE if k[0] != key[0]]:
-            del _BPE_BATCH_CACHE[k]
-        rules, vocab = _bpe_train_batched_on(_bpe_vocab(spark, sf_dir))
-        _BPE_BATCH_CACHE[key] = (rules, vocab)
-    return _BPE_BATCH_CACHE[key]
+    return session_memo(
+        spark, "bpe_train_batched", sf_dir,
+        lambda: _bpe_train_batched_on(_bpe_vocab(spark, sf_dir)),
+    )
 
 
 def _bpe_fuse(col, lhs: str, rhs: str):
@@ -1139,21 +1134,16 @@ def _bpe_apply_rules(vocab: DataFrame, rules) -> DataFrame:
 # Session memo: three consumers (bpe_train_merges, bpe_doc_tokens,
 # tokenizer_fertility) previously each re-ran the full training loop —
 # BPE_TRAIN_MERGES sequential 1-row collects per call.
-_BPE_TRAIN_CACHE: dict[tuple[str, str], tuple[list, DataFrame]] = {}
-
-
 def _bpe_train(spark: SparkSession, sf_dir: str):
     """The shared training loop: returns (merge rules, final vocab DF
     with the merged symbol sequences), memoized per (application,
     corpus) — the trained tokenizer is a build-once artifact like the
     IVF quantizer (and the index_store persists it)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BPE_TRAIN_CACHE:
-        for k in [k for k in _BPE_TRAIN_CACHE if k[0] != key[0]]:
-            del _BPE_TRAIN_CACHE[k]
+    def build():
         rules, vocab = _bpe_train_on(_bpe_vocab(spark, sf_dir))
-        _BPE_TRAIN_CACHE[key] = (rules, vocab.localCheckpoint())
-    return _BPE_TRAIN_CACHE[key]
+        return rules, vocab.localCheckpoint()
+
+    return session_memo(spark, "bpe_train", sf_dir, build)
 
 
 BPE_DOC_MOD = 10

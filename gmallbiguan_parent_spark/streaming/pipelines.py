@@ -34,6 +34,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions import dec
 from ..io import load_table, read_parquet
+from ..memo import session_memo
 
 WINDOW = "10 minutes"
 WATERMARK = "3 seconds"     # ST1: bounded out-of-orderness, 3 s
@@ -232,19 +233,13 @@ def _jump_state_fn(key, pdf_iter, state: GroupState):
                             "ts_us": out_ts, "is_jump": out_jump})
 
 
-# staged sentinel dirs are pure functions of (corpus, pad): memoized
-# per application so jump/sessions/funnel replays in one session reuse
-# one staging instead of rebuilding ~1s of copy+write per call
-_STAGE_CACHE: dict[tuple[str, str, int], str] = {}
-
-
 # One sentinel pad for EVERY staged stream (VERDICT r8 #7): any pad
 # strictly beyond a query's own gap/timeout/window + watermark delay is
 # correct (the sentinel only needs to push the watermark past every
 # real close; how far past is irrelevant to a bounded replay), so all
 # four former per-query pads collapse onto the largest need — the 6 h
 # funnel window (analytics.FUNNEL_WINDOW_S; literal here to avoid a
-# circular module import) — and _STAGE_CACHE serves ONE staged dir per
+# circular module import) — and the staging memo serves ONE staged dir per
 # (session, corpus) instead of one per (session, corpus, pad): three
 # fewer max-ts scans + sentinel builds + corpus copies per bench run.
 STAGE_PAD_S = 6 * 3600 + 120
@@ -325,28 +320,18 @@ def _no_trailing_empty_batch(spark: SparkSession):
 # per-(application, corpus) memo of the one-pass key stats every
 # stateful replay's partition derivation reads: (n_users, span_us,
 # n_rows). One tiny agg job per session per corpus.
-_EVENTS_KEY_STATS_CACHE: dict[tuple[str, str], tuple[int, int, int]] = {}
-
-
 def _events_key_stats(spark: SparkSession, sf_dir: str) -> tuple[int, int, int]:
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _EVENTS_KEY_STATS_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    for k in [k for k in _EVENTS_KEY_STATS_CACHE if k[0] != ck[0]]:
-        del _EVENTS_KEY_STATS_CACHE[k]
-    from ..io import load_table
+    def build() -> tuple[int, int, int]:
+        # load_table owns the events ns->us contract — re-implementing
+        # it here would let the two readers drift
+        row = load_table(spark, sf_dir, "events").agg(
+            F.countDistinct("user_id").alias("u"),
+            (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))).alias("span"),
+            F.count("*").alias("n"),
+        ).first()
+        return int(row["u"]), int(row["span"] or 0), int(row["n"])
 
-    # load_table owns the events ns->us contract — re-implementing it
-    # here would let the two readers drift
-    row = load_table(spark, sf_dir, "events").agg(
-        F.countDistinct("user_id").alias("u"),
-        (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))).alias("span"),
-        F.count("*").alias("n"),
-    ).first()
-    stats = (int(row["u"]), int(row["span"] or 0), int(row["n"]))
-    _EVENTS_KEY_STATS_CACHE[ck] = stats
-    return stats
+    return session_memo(spark, "events_key_stats", sf_dir, build)
 
 
 def _stage_events_with_sentinels(spark: SparkSession, sf_dir: str, pad_s: int | None = None) -> str:
@@ -359,16 +344,21 @@ def _stage_events_with_sentinels(spark: SparkSession, sf_dir: str, pad_s: int | 
     shared default exceeds every caller's gap/timeout + watermark delay
     (assertions at the call sites); sentinels never
     appear in output (state fns drop them, session sentinels stay
-    unemitted because their own window never closes)."""
+    unemitted because their own window never closes).
+    Staged dirs are pure functions of (corpus, pad): memoized per
+    application so jump/sessions/funnel replays in one session reuse
+    one staging instead of rebuilding ~1s of copy+write per call."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if pad_s is None:
         pad_s = STAGE_PAD_S
-    ck = (spark.sparkContext.applicationId, sf_dir, pad_s)
-    cached = _STAGE_CACHE.get(ck)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    for k in [k for k in _STAGE_CACHE if k[0] != ck[0]]:
-        del _STAGE_CACHE[k]
+    return session_memo(
+        spark, "sentinel_stage", (sf_dir, pad_s),
+        lambda: _build_sentinel_stage(spark, sf_dir, pad_s),
+        valid=os.path.isdir,
+    )
+
+
+def _build_sentinel_stage(spark: SparkSession, sf_dir: str, pad_s: int) -> str:
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     max_ts = raw.agg(F.max("ts")).first()[0]
     if dict(raw.dtypes).get("ts") == "bigint":  # raw int64 nanoseconds
@@ -398,7 +388,6 @@ def _stage_events_with_sentinels(spark: SparkSession, sf_dir: str, pad_s: int | 
                 shutil.copy(f"{src}/{p}", f"{stage}/events_{i:05d}.parquet")
     else:
         shutil.copy(src, f"{stage}/events.parquet")
-    _STAGE_CACHE[ck] = stage
     return stage
 
 

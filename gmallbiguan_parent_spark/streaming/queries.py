@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import dec
+from ..memo import session_memo
 from .pipelines import (
     WINDOW, _events_key_stats, _events_stream, _no_trailing_empty_batch,
     _stateful_replay_parts, _table_stream, run_stream_to_df,
@@ -51,36 +52,25 @@ def _scratch(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
-# static-side (band table, shingle sets, per-ref band-key arrays)
-# checkpoints for the stream-static LSH screen, keyed on
-# (applicationId, sf_dir)
-_SIN_STATIC_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
-
 # Staged multi-file ingest SOURCES are pure functions of the corpus (a
 # repartition(n_files) copy of a deterministic table): memoized per
-# application exactly like pipelines._STAGE_CACHE, so repeated replays
-# in one session re-read ONE staging instead of re-writing it per call.
-# Only the INPUT staging is shared — every call still replays the
-# stream and re-derives its store/artifacts from the parquet input.
-# Keyed on the staged PROJECTION too (ADVICE r12: the embeddings
-# staging holds a (vec_id, v) cast projection — a future call site
-# staging the raw table under the same (table, n_files) must get its
-# own stage, never the mismatched schema).
-_INGEST_STAGE_CACHE: dict[tuple[str, str, str, int, str], str] = {}
-
-
+# application exactly like the sentinel staging in pipelines, so
+# repeated replays in one session re-read ONE staging instead of
+# re-writing it per call. Only the INPUT staging is shared — every call
+# still replays the stream and re-derives its store/artifacts from the
+# parquet input. Keyed on the staged PROJECTION too (ADVICE r12: the
+# embeddings staging holds a (vec_id, v) cast projection — a future
+# call site staging the raw table under the same (table, n_files) must
+# get its own stage, never the mismatched schema). A stage is served
+# only once its _SUCCESS marker exists: a failed staging is re-derived.
 def _staged_ingest_src(
     spark: SparkSession, sf_dir: str, table: str, n_files: int, proj: str = "raw"
 ) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, table, n_files, proj)
-    hit = _INGEST_STAGE_CACHE.get(key)
-    if hit is not None and os.path.exists(f"{hit}/{table}/_SUCCESS"):
-        return hit
-    for k in [k for k in _INGEST_STAGE_CACHE if k[0] != key[0]]:
-        del _INGEST_STAGE_CACHE[k]
-    stage = _scratch(f"ing_{table}_")
-    _INGEST_STAGE_CACHE[key] = stage
-    return stage
+    return session_memo(
+        spark, "ingest_stage", (sf_dir, table, n_files, proj),
+        lambda: _scratch(f"ing_{table}_"),
+        valid=lambda stage: os.path.exists(f"{stage}/{table}/_SUCCESS"),
+    )
 
 
 def _ensure_staged(
@@ -542,11 +532,10 @@ def stream_incremental_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus ARE persisted index tables maintained next to it, not
     # something each micro-batch rebuilds; within a session every
     # invocation shares one localCheckpoint (the batch dedup family's
-    # _SHINGLE_SET_CACHE pattern — this was the 10.7 s fixed overhead)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIN_STATIC_CACHE:
-        for k in [k for k in _SIN_STATIC_CACHE if k[0] != key[0]]:
-            del _SIN_STATIC_CACHE[k]
+    # shingle-set pattern — this was the 10.7 s fixed overhead): the
+    # band table, shingle sets and per-ref band-key arrays
+
+    def build() -> tuple[DataFrame, DataFrame, DataFrame]:
         # spread: the static-side shingling/MinHash runs eagerly inside
         # the localCheckpoints — a single-file read would do all of it
         # on one core (review finding)
@@ -570,14 +559,15 @@ def stream_incremental_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-        _SIN_STATIC_CACHE[key] = (
+        return (
             bands_ck,
             ref_docs.select(
                 F.col("doc_id").alias("ref_id"), _shingles(F.col("text")).alias("sh_r")
             ).localCheckpoint(),
             keys_ck,
         )
-    ref_bands, ref_sets, ref_keys = _SIN_STATIC_CACHE[key]
+
+    ref_bands, ref_sets, ref_keys = session_memo(spark, "stream_lsh_static", sf_dir, build)
 
     stream = (
         _table_stream(spark, sf_dir, "documents")
@@ -670,11 +660,6 @@ def stream_incremental_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
-# benchmark gram-set checkpoint for the streaming decontamination
-# screen, keyed on (applicationId, sf_dir)
-_DECON_STATIC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def stream_ngram_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-stream benchmark decontamination — the screen an ingestion
     pipeline runs as documents arrive: each incoming doc's 8-token
@@ -695,16 +680,13 @@ def stream_ngram_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     never drift."""
     from ..operators.dedup import CONTAM_DROP_FRAC, SPAN_TOKENS, _token_windows
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DECON_STATIC_CACHE:
-        for k in [k for k in _DECON_STATIC_CACHE if k[0] != key[0]]:
-            del _DECON_STATIC_CACHE[k]
+    def build() -> DataFrame:
         from ..io import load_table_spread
 
         bench_docs = load_table_spread(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 17 == 0
         )
-        _DECON_STATIC_CACHE[key] = (
+        return (
             bench_docs.select(
                 F.explode(_token_windows(F.col("text"), SPAN_TOKENS)).alias("gram")
             )
@@ -712,7 +694,8 @@ def stream_ngram_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("hit", F.lit(1))
             .localCheckpoint()
         )
-    bench = _DECON_STATIC_CACHE[key]
+
+    bench = session_memo(spark, "stream_decon_grams", sf_dir, build)
 
     stream = _table_stream(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 17 != 0
@@ -1201,11 +1184,6 @@ def stream_ann_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir).drop("batch_id")
 
 
-# static benchmark SRP signatures for the in-stream semantic screen,
-# keyed on (applicationId, sf_dir)
-_SEMDECON_STATIC_CACHE: dict[tuple[str, str], tuple[DataFrame, int]] = {}
-
-
 def stream_semantic_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-stream SEMANTIC benchmark decontamination — the embedding
     twin of stream_ngram_decontaminate: corpus vectors are screened
@@ -1228,10 +1206,7 @@ def stream_semantic_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFra
         _srp_signature, _srp_signature_table, srp_bits_for,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SEMDECON_STATIC_CACHE:
-        for k in [k for k in _SEMDECON_STATIC_CACHE if k[0] != key[0]]:
-            del _SEMDECON_STATIC_CACHE[k]
+    def build() -> tuple[DataFrame, int]:
         from ..io import load_table_spread
 
         n = load_table_spread(spark, sf_dir, "embeddings").count()
@@ -1240,8 +1215,9 @@ def stream_semantic_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFra
             .filter(F.col("vec_id") % 17 == 0)
             .localCheckpoint()
         )
-        _SEMDECON_STATIC_CACHE[key] = (bench, srp_bits_for(n))
-    bench, bits = _SEMDECON_STATIC_CACHE[key]
+        return bench, srp_bits_for(n)
+
+    bench, bits = session_memo(spark, "stream_semdecon_bench", sf_dir, build)
 
     stream = _table_stream(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") % 17 != 0

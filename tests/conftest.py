@@ -17,6 +17,19 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def isolated_memo(monkeypatch):
+    """An empty session memo for one test; the test session's memo is
+    put back afterwards, so a test that shrinks the bound or runs stub
+    applications does not drop the entries the other tests share."""
+    from collections import OrderedDict
+
+    from gmallbiguan_parent_spark import memo
+
+    monkeypatch.setattr(memo, "_ENTRIES", OrderedDict())
+    monkeypatch.setattr(memo, "_app", None)
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from gmallbiguan_parent_spark import memo
 from tests.conftest import SF_DIR
 
 DOC_WM = 350   # subset build indexes doc_id/vec_id <= this; refresh gets the rest
@@ -203,7 +204,7 @@ def test_env_root_makes_fresh_session_read_only(spark, tmp_path, monkeypatch):
     import gmallbiguan_parent_spark.operators.index_store as ix
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "stable"))
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    memo.clear("index_root")
     root1 = ix.ensure_index(spark, SF_DIR)
     stamp = (tmp_path / "stable").stat()
 
@@ -212,7 +213,7 @@ def test_env_root_makes_fresh_session_read_only(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         ix, "build_index", lambda *a, **k: calls.append(1) or real_build(*a, **k)
     )
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})  # simulate a new application
+    memo.clear("index_root")  # simulate a new application
     root2 = ix.ensure_index(spark, SF_DIR)
     assert root2 == root1
     assert calls == [], "existing manifest must short-circuit the build"
@@ -407,7 +408,7 @@ def test_ensure_index_atomic_publish_shared_root(spark, tmp_path, monkeypatch):
 
     base = str(tmp_path / "shared")
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", base)
-    ix._ROOT_CACHE.clear()
+    memo.clear("index_root")
     # pre-create the stale empty root the old code used to makedirs
     sf_key = SF_DIR.strip("/").replace("/", "_")
     stale = os.path.join(base, sf_key, "pubtest")
@@ -417,13 +418,13 @@ def test_ensure_index_atomic_publish_shared_root(spark, tmp_path, monkeypatch):
     assert os.path.exists(f"{root}/{ix.MANIFEST}")
     assert not [d for d in os.listdir(os.path.dirname(root)) if ".build." in d]
     # second session (cold cache): adopts the published manifest, no rebuild
-    ix._ROOT_CACHE.clear()
+    memo.clear("index_root")
     calls = []
     real = ix.build_index
     monkeypatch.setattr(ix, "build_index", lambda *a, **k: calls.append(1) or real(*a, **k))
     assert ix.ensure_index(spark, SF_DIR, variant="pubtest") == root
     assert not calls, "published manifest must short-circuit the build"
-    ix._ROOT_CACHE.clear()
+    memo.clear("index_root")
 
 
 def test_compact_ledger_resume_after_partial_deletes(spark, tmp_path):
@@ -477,17 +478,17 @@ def test_base_queries_read_persisted_store_when_env_set(spark, tmp_path, monkeyp
     from gmallbiguan_parent_spark.operators.dedup import minhash_lsh_pairs
 
     monkeypatch.delenv("SPARK_GRAFT_INDEX_DIR", raising=False)
-    ix._ROOT_CACHE.clear()
+    memo.clear("index_root")
     assert ix.persisted_root(spark, SF_DIR, "docs") is None
     cold = sorted(map(tuple, minhash_lsh_pairs(spark, SF_DIR).collect()))
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "warm"))
-    ix._ROOT_CACHE.clear()
+    memo.clear("index_root")
     root = ix.persisted_root(spark, SF_DIR, "docs")
     assert root and os.path.exists(f"{root}/{ix.MANIFEST}")
     warm = sorted(map(tuple, minhash_lsh_pairs(spark, SF_DIR).collect()))
     assert warm == cold and len(warm) > 0
-    ix._ROOT_CACHE.clear()
+    memo.clear("index_root")
 
 
 def test_persisted_root_stale_store_falls_back(spark, tmp_path, monkeypatch):
@@ -506,8 +507,8 @@ def test_persisted_root_stale_store_falls_back(spark, tmp_path, monkeypatch):
             str(corpus / f"{t}.parquet")
         )
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    ix._ROOT_CACHE.clear()
-    ix._FRESH_CACHE.clear()
+    memo.clear("index_root")
+    memo.clear("fresh")
     root = ix.persisted_root(spark, str(corpus), "docs")
     assert root is not None
 
@@ -515,15 +516,15 @@ def test_persisted_root_stale_store_falls_back(spark, tmp_path, monkeypatch):
         [(10**7, "zz brand new document text", "en", "web", 26)],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.mode("append").parquet(str(corpus / "documents.parquet"))
-    ix._FRESH_CACHE.clear()
+    memo.clear("fresh")
     assert ix.persisted_root(spark, str(corpus), "docs") is None, (
         "stale store must not serve the warm path"
     )
     ix.refresh_index(spark, str(corpus), root)
-    ix._FRESH_CACHE.clear()
+    memo.clear("fresh")
     assert ix.persisted_root(spark, str(corpus), "docs") == root
-    ix._ROOT_CACHE.clear()
-    ix._FRESH_CACHE.clear()
+    memo.clear("index_root")
+    memo.clear("fresh")
 
 
 def test_two_process_race_on_shared_root(tmp_path):
@@ -613,7 +614,7 @@ def test_old_layout_store_upgraded_on_ensure(spark, tmp_path, monkeypatch):
     import gmallbiguan_parent_spark.operators.index_store as ix
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    memo.clear("index_root")
     root = ix.ensure_index(spark, SF_DIR)
     manifest_before = ix.read_manifest(root)
 
@@ -622,7 +623,7 @@ def test_old_layout_store_upgraded_on_ensure(spark, tmp_path, monkeypatch):
     import shutil
 
     shutil.rmtree(f"{root}/srp_sigs_wide")
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})  # new application
+    memo.clear("index_root")  # new application
     root2 = ix.ensure_index(spark, SF_DIR)
     assert root2 == root
     assert os.path.isdir(f"{root}/srp_sigs_wide"), "layout not upgraded"
@@ -636,7 +637,7 @@ def test_old_layout_store_upgraded_on_ensure(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         ix, "build_index", lambda *a, **k: calls.append(1) or real_build(*a, **k)
     )
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    memo.clear("index_root")
     assert ix.ensure_index(spark, SF_DIR) == root
     assert calls == []
 
@@ -681,7 +682,7 @@ def test_crashed_wide_compaction_heals_without_rebuild(spark, tmp_path, monkeypa
     import gmallbiguan_parent_spark.operators.index_store as ix
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    memo.clear("index_root")
     root = ix.ensure_index(spark, SF_DIR)
     # simulate the mid-swap crash: artifact moved aside, stage gone
     os.replace(f"{root}/srp_sigs_wide", f"{root}/_old_srp_sigs_wide")
@@ -691,7 +692,7 @@ def test_crashed_wide_compaction_heals_without_rebuild(spark, tmp_path, monkeypa
     monkeypatch.setattr(
         ix, "build_index", lambda *a, **k: calls.append(1) or real_build(*a, **k)
     )
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})  # new application
+    memo.clear("index_root")  # new application
     assert ix.ensure_index(spark, SF_DIR) == root
     assert calls == [], "crashed compaction must heal, not rebuild"
     assert os.path.isdir(f"{root}/srp_sigs_wide")
@@ -714,15 +715,52 @@ def test_persisted_root_never_takes_over_old_layout(spark, tmp_path, monkeypatch
     import gmallbiguan_parent_spark.operators.index_store as ix
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    memo.clear("index_root")
     root = ix.ensure_index(spark, SF_DIR)
     shutil.rmtree(f"{root}/srp_sigs_wide")  # simulate the pre-r9 layout
     manifest_mtime = os.path.getmtime(f"{root}/{ix.MANIFEST}")
 
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})  # new application
-    ix._FRESH_CACHE.clear()
+    memo.clear("index_root")  # new application
+    memo.clear("fresh")
     assert ix.persisted_root(spark, SF_DIR, "vecs") is None
     assert ix.persisted_root(spark, SF_DIR, "docs") is None
     # the reader neither rebuilt the missing artifact nor republished
     assert not os.path.isdir(f"{root}/srp_sigs_wide")
     assert os.path.getmtime(f"{root}/{ix.MANIFEST}") == manifest_mtime
+
+
+def test_wide_store_tag_names_the_watermark_that_filtered_the_rows(
+    spark, tmp_path, monkeypatch
+):
+    """The memo tag of the persisted wide sigs must describe the rows
+    returned: with a manifest whose vec_watermark rises on every read (a
+    refresh committing between reads), the tag's watermark still equals
+    the one the artifact filter used, because both come from one read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import gmallbiguan_parent_spark.operators.index_store as ix
+
+    root = tmp_path / "store"
+    (root / "srp_sigs_wide").mkdir(parents=True)
+    ids = list(range(21))
+    pq.write_table(
+        pa.table({
+            "vec_id": ids, "v": [[1.0]] * 21, "table_id": [0] * 21,
+            "sig": [0] * 21, "ingest": ids,
+        }),
+        root / "srp_sigs_wide" / "part-0.parquet",
+    )
+    reads = []
+
+    def rising_manifest(_root):
+        reads.append(1)
+        return {"vec_watermark": 9 + len(reads), "srp_bits": 4}
+
+    monkeypatch.setattr(ix, "ensure_index", lambda _spark, _sf: str(root))
+    monkeypatch.setattr(ix, "read_manifest", rising_manifest)
+    sigs, _masks, source = ix._wide_sigs_from_store(spark, "/corpus")
+    tag_wm = int(source.rsplit(":", 1)[1])
+    assert source == f"store:{root}:{tag_wm}"
+    assert sigs.agg(F.max("vec_id")).first()[0] == tag_wm
+    assert len(reads) == 1

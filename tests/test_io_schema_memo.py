@@ -9,7 +9,7 @@ import datetime
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-import gmallbiguan_parent_spark.io as gio
+from gmallbiguan_parent_spark import memo
 from gmallbiguan_parent_spark.io import load_table, read_parquet
 from gmallbiguan_parent_spark.session import TUNED_MARKER
 from tests.conftest import SF_DIR as SF
@@ -78,26 +78,25 @@ def test_type_changing_conf_is_part_of_the_key(spark, tmp_path):
     assert dict(read_parquet(s, path).dtypes)["t"] == "timestamp_ntz"
 
 
-def test_memo_is_bounded(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(gio, "_SCHEMA_MEMO", type(gio._SCHEMA_MEMO)())
-    monkeypatch.setattr(gio, "_SCHEMA_MEMO_MAX", 2)
+def test_memo_is_bounded(spark, tmp_path, monkeypatch, isolated_memo):
+    monkeypatch.setattr(memo, "MAX_ENTRIES", 2)
     for i in range(3):
         path = str(tmp_path / f"t{i}.parquet")
         pq.write_table(pa.table({"x": [i]}), path)
         assert read_parquet(spark, path).first().x == i
-    assert len(gio._SCHEMA_MEMO) == 2
-    assert all(k[0] != str(tmp_path / "t0.parquet") for k in gio._SCHEMA_MEMO)
+    held = memo.entries("parquet_schema")
+    assert len(held) == 2
+    assert all(k[0] != str(tmp_path / "t0.parquet") for k in held)
 
 
-def test_memo_under_concurrent_readers(spark, tmp_path, monkeypatch):
+def test_memo_under_concurrent_readers(spark, tmp_path, monkeypatch, isolated_memo):
     """More reader threads than memo slots and than cores, with a short
     switch interval: every read gets its own path's schema and the
     memo never exceeds its bound."""
     import sys
     from concurrent.futures import ThreadPoolExecutor
 
-    monkeypatch.setattr(gio, "_SCHEMA_MEMO", type(gio._SCHEMA_MEMO)())
-    monkeypatch.setattr(gio, "_SCHEMA_MEMO_MAX", 3)
+    monkeypatch.setattr(memo, "MAX_ENTRIES", 3)
     paths = []
     for i in range(6):
         paths.append(str(tmp_path / f"t{i}.parquet"))
@@ -106,8 +105,7 @@ def test_memo_under_concurrent_readers(spark, tmp_path, monkeypatch):
     def read(j):
         i = j % len(paths)
         assert read_parquet(spark, paths[i]).columns == [f"c{i}"]
-        with gio._SCHEMA_LOCK:
-            assert len(gio._SCHEMA_MEMO) <= 3
+        assert len(memo.entries("parquet_schema")) <= 3
 
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
@@ -117,4 +115,4 @@ def test_memo_under_concurrent_readers(spark, tmp_path, monkeypatch):
                 f.result(timeout=120)
     finally:
         sys.setswitchinterval(old)
-    assert len(gio._SCHEMA_MEMO) == 3
+    assert len(memo.entries("parquet_schema")) == 3

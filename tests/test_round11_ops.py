@@ -17,6 +17,8 @@
 
 from __future__ import annotations
 
+from gmallbiguan_parent_spark import memo
+
 SF_DIR = "/root/testdata/sf0.01"
 
 
@@ -177,7 +179,7 @@ def test_knn_graph_published_lifecycle(spark, tmp_path, monkeypatch):
     from gmallbiguan_parent_spark.operators.similarity import knn_graph_wide_capped
 
     sf = "/root/testdata/sf0.001"
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    memo.clear("index_root")
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
 
     live = {

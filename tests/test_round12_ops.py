@@ -18,6 +18,8 @@
 
 from __future__ import annotations
 
+from gmallbiguan_parent_spark import memo
+
 SF_DIR = "/root/testdata/sf0.01"
 
 
@@ -223,7 +225,7 @@ def test_publish_graph_watermark_drift_retry(spark, tmp_path, monkeypatch):
     import gmallbiguan_parent_spark.operators.index_store as ix
 
     sf = "/root/testdata/sf0.001"
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    memo.clear("index_root")
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     root = ix.ensure_index(spark, sf)
 
@@ -299,14 +301,11 @@ def test_events_key_stats_memo_and_values(spark):
     must equal a direct recomputation of the same aggregates."""
     from pyspark.sql import functions as F
 
-    from gmallbiguan_parent_spark.streaming.pipelines import (
-        _EVENTS_KEY_STATS_CACHE, _events_key_stats,
-    )
+    from gmallbiguan_parent_spark.streaming.pipelines import _events_key_stats
 
     got = _events_key_stats(spark, SF_DIR)
     assert _events_key_stats(spark, SF_DIR) is got  # memo hit
-    ck = (spark.sparkContext.applicationId, SF_DIR)
-    assert _EVENTS_KEY_STATS_CACHE[ck] == got
+    assert memo.entries("events_key_stats")[SF_DIR] == (None, got)
 
     from gmallbiguan_parent_spark.io import load_table
 
@@ -327,16 +326,21 @@ def test_staged_ingest_src_memo(spark, tmp_path, monkeypatch):
 
     import gmallbiguan_parent_spark.streaming.queries as sq
 
-    monkeypatch.setattr(sq, "_INGEST_STAGE_CACHE", {})
-    monkeypatch.setattr(sq, "_scratch", lambda p: str(tmp_path / f"{p}x"))
-    s1 = sq._staged_ingest_src(spark, SF_DIR, "documents", 4)
+    # a corpus path of this test's own, so the stub stage never reaches
+    # another test's memo slot
+    sf = str(tmp_path / "corpus")
+    made = []
+    monkeypatch.setattr(
+        sq, "_scratch", lambda p: made.append(p) or str(tmp_path / f"{p}x")
+    )
+    s1 = sq._staged_ingest_src(spark, sf, "documents", 4)
     # no _SUCCESS yet: the memo must NOT serve the unstaged path
-    s2 = sq._staged_ingest_src(spark, SF_DIR, "documents", 4)
-    assert s2 == s1  # same scratch (deterministic stub), but re-derived
+    s2 = sq._staged_ingest_src(spark, sf, "documents", 4)
+    assert s2 == s1 and len(made) == 2  # same scratch (deterministic stub), but re-derived
     os.makedirs(f"{s1}/documents", exist_ok=True)
     open(f"{s1}/documents/_SUCCESS", "w").close()
-    s3 = sq._staged_ingest_src(spark, SF_DIR, "documents", 4)
-    assert s3 == s1  # now a true memo hit on the staged copy
+    s3 = sq._staged_ingest_src(spark, sf, "documents", 4)
+    assert s3 == s1 and len(made) == 2  # now a true memo hit on the staged copy
 
 
 def test_containment_sizes_pair_agreement(spark):

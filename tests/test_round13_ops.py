@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from gmallbiguan_parent_spark import memo
 from tests.conftest import SF_DIR
 
 
@@ -44,17 +45,15 @@ def test_capped_graph_store_read_matches_live(spark, tmp_path, monkeypatch):
     direct Spark-vs-Spark pin that the stored ranking sketch equals the
     on-the-fly one."""
     import gmallbiguan_parent_spark.operators.index_store as ix
-    from gmallbiguan_parent_spark.operators.similarity import (
-        _KNN_SLIM_CACHE, knn_graph_wide_capped,
-    )
+    from gmallbiguan_parent_spark.operators.similarity import knn_graph_wide_capped
 
     monkeypatch.delenv("SPARK_GRAFT_INDEX_DIR", raising=False)
-    _KNN_SLIM_CACHE.clear()
+    memo.clear("knn_slim")
     live = sorted(map(tuple, knn_graph_wide_capped(spark, SF_DIR).collect()))
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
-    ix._FRESH_CACHE.clear()
+    memo.clear("index_root")
+    memo.clear("fresh")
     store = sorted(
         map(tuple, ix.knn_graph_capped_from_index(spark, SF_DIR).collect())
     )
@@ -70,7 +69,7 @@ def test_pre_v2_layout_store_upgraded_on_ensure(spark, tmp_path, monkeypatch):
     import gmallbiguan_parent_spark.operators.index_store as ix
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})
+    memo.clear("index_root")
     root = ix.ensure_index(spark, SF_DIR)
     assert ix.read_manifest(root)["layout"] == ix._LAYOUT_VERSION
 
@@ -81,8 +80,8 @@ def test_pre_v2_layout_store_upgraded_on_ensure(spark, tmp_path, monkeypatch):
         json.dump(m, f)
     assert not ix._layout_current(root)
 
-    monkeypatch.setattr(ix, "_ROOT_CACHE", {})  # new application
-    ix._FRESH_CACHE.clear()
+    memo.clear("index_root")  # new application
+    memo.clear("fresh")
     assert ix.persisted_root(spark, SF_DIR, "vecs") is None  # reader: live
     root2 = ix.ensure_index(spark, SF_DIR)  # index path: swap-upgrade
     assert root2 == root
@@ -147,22 +146,23 @@ def test_mp_confirmed_memo_policy(spark, monkeypatch):
             return self
 
     monkeypatch.setattr(sim, "_mp_confirmed_pairs", lambda s, m: _Fake())
-    monkeypatch.setattr(sim, "_MP_CONF_CACHE", {})
-    cache = sim._MP_CONF_CACHE
-    app = spark.sparkContext.applicationId
+
+    def held() -> set[tuple[str, str]]:
+        """(corpus, tag) of every confirmed-pair entry."""
+        return {(k[0], tag) for k, (tag, _) in memo.entries("mp_confirmed").items()}
 
     sim._mp_confirmed_memo(spark, "/c1", "wide:live", None, [])
     sim._mp_confirmed_memo(spark, "/c1", "wide:store:/r:10", None, [])
-    assert (app, "/c1", "wide:live") in cache, "live evicted by store insert"
+    assert ("/c1", "wide:live") in held(), "live evicted by store insert"
     sim._mp_confirmed_memo(spark, "/c2", "wide:store:/r:10", None, [])
     # a refreshed store (new watermark) supersedes the old store entry
     sim._mp_confirmed_memo(spark, "/c1", "wide:store:/r:11", None, [])
-    assert (app, "/c1", "wide:store:/r:10") not in cache
-    assert (app, "/c1", "wide:live") in cache
-    assert (app, "/c2", "wide:store:/r:10") in cache, "other corpus evicted"
+    assert ("/c1", "wide:store:/r:10") not in held()
+    assert ("/c1", "wide:live") in held()
+    assert ("/c2", "wide:store:/r:10") in held(), "other corpus evicted"
     # the radius layout never shares a tag prefix with the wide layout
     sim._mp_confirmed_memo(spark, "/c1", "radius:live", None, [])
-    assert (app, "/c1", "wide:store:/r:11") in cache
+    assert ("/c1", "wide:store:/r:11") in held()
 
 
 def test_build_threads_equal_artifacts(spark, tmp_path, monkeypatch):

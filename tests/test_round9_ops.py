@@ -7,6 +7,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from gmallbiguan_parent_spark import memo
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -90,8 +92,8 @@ def test_persisted_root_sees_mid_session_corpus_growth(spark, tmp_path, monkeypa
         shutil.copy(f"{SF_DIR}/{t}.parquet", sf / f"{t}.parquet")
     # the remaining tables aren't consulted by the vecs/docs families
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    index_store._ROOT_CACHE.clear()
-    index_store._FRESH_CACHE.clear()
+    memo.clear("index_root")
+    memo.clear("fresh")
     root = index_store.persisted_root(spark, str(sf), "vecs")
     assert root is not None  # fresh build adopted
     # grow the corpus: append one vector past the manifest watermark

@@ -124,10 +124,9 @@ def timed(qs, name, spark, sf_dir):
 def main() -> None:
     from pyspark.sql import functions as F
 
+    from gmallbiguan_parent_spark import memo
     from gmallbiguan_parent_spark.io import load_table
-    from gmallbiguan_parent_spark.operators.graph import (
-        TRI_MIN_SUPPORT, _COPAIR_CACHE,
-    )
+    from gmallbiguan_parent_spark.operators.graph import TRI_MIN_SUPPORT
     from gmallbiguan_parent_spark.pipelines import all_queries
     from gmallbiguan_parent_spark.session import get_spark
 
@@ -165,11 +164,11 @@ def main() -> None:
 
     e_small, e_dense = edge_count(SRC), edge_count(DENSE)
     print(f"# edges: 1x {e_small:,} -> dense100x {e_dense:,}", file=sys.stderr)
-    _COPAIR_CACHE.clear()  # make each graph timing below pay its own edge build
+    memo.clear("copurchase_pairs")  # make each graph timing below pay its own edge build
     tri_s = timed(qs, "copurchase_triangles", spark, SRC)
-    _COPAIR_CACHE.clear()
+    memo.clear("copurchase_pairs")
     tri_d = timed(qs, "copurchase_triangles", spark, DENSE)
-    _COPAIR_CACHE.clear()
+    memo.clear("copurchase_pairs")
     cap_d = timed(qs, "copurchase_triangles_capped", spark, DENSE)
     ovf_d = qs["copurchase_degree_overflow"](spark, DENSE).collect()[0]
 
