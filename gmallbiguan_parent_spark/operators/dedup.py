@@ -18,11 +18,16 @@ to use it (oracle then checks rows-only).
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table, load_table_spread
 from ..memo import session_memo
+
+if TYPE_CHECKING:
+    from .index_store import Store
 
 # MinHash configuration: 15 permutations in 5 bands of 3 rows.
 # P(candidate | jaccard=j) = 1-(1-j^3)^5:
@@ -859,7 +864,9 @@ def _explode_min_sig(shingled: DataFrame) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def minhash_lsh_pairs(
+    spark: SparkSession, sf_dir: str, store: Store | None = None
+) -> DataFrame:
     """Near-duplicate pairs via MinHash LSH + exact Jaccard confirm.
 
     Plan: explode distinct shingles, hash each ONCE (md5 → 60-bit int —
@@ -886,12 +893,19 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew only appears for true mega-duplicate clusters, which AQE
     skew-join splits. The confirm re-join touches only candidate docs —
     at 100 TB that is orders of magnitude smaller than the corpus.
-    """
-    from .index_store import _read_bands, _read_sets, persisted_root
 
-    root = persisted_root(spark, sf_dir, "docs")
-    if root:  # warm environment: read the persisted band/set artifacts
-        return _lsh_pairs_from_tables(_read_bands(spark, root), _read_sets(spark, root))
+    store: the index store to read the band and set tables from (the
+    *_from_index twin passes one); None lets index_store.store_for
+    decide.
+    """
+    from .index_store import store_for
+
+    store = store or store_for(spark, sf_dir, "docs")
+    if store:  # warm environment: read the persisted band/set artifacts
+        return _lsh_pairs_from_tables(
+            store.read(spark, "minhash_bands").select("doc_id", "band_id", "band_key"),
+            store.read(spark, "shingle_sets").select("doc_id", "s"),
+        )
     sets = _shingle_sets(spark, sf_dir)
     banded = _minhash_banded_from_sets(sets)
     return _lsh_pairs_from_tables(banded, sets)
@@ -938,7 +952,9 @@ def _lsh_pairs_from_tables(banded: DataFrame, sets: DataFrame) -> DataFrame:
     )
 
 
-def incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def incremental_neardup(
+    spark: SparkSession, sf_dir: str, store: Store | None = None
+) -> DataFrame:
     """Incremental-ingestion near-dup check: an incoming BATCH of
     documents (doc_id % 2 = 1, standing in for today's crawl) is
     screened against an existing REFERENCE corpus (doc_id % 2 = 0, the
@@ -952,27 +968,43 @@ def incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch), a band-keyed ref⋈batch equi-join for candidates (never
     ref×ref — the quadratic side of a self-join is gone), exact-Jaccard
     confirm on candidates only, then a min() witness per batch doc and
-    a left join back so novel docs surface with NULLs."""
-    # shingle sets and the band table each feed two consumers (ref/batch
-    # splits; candidate + confirm joins) — materialize ONCE via the
-    # shared helper. At warehouse scale these are the persisted
-    # signature/band tables of the reference corpus.
-    sets = _shingle_sets(spark, sf_dir)
-    banded = _minhash_banded_from_sets(sets).localCheckpoint()
-    ref = banded.filter(F.col("doc_id") % 2 == 0).select(
-        F.col("doc_id").alias("ref_id"), "band_id", "band_key"
+    a left join back so novel docs surface with NULLs.
+
+    store: the reference variant's index store (the *_from_index twin
+    passes it) — its band and set tables are the reference side, and
+    only the batch is shingled and banded; None derives both sides
+    live."""
+    batch_docs = load_table_spread(spark, sf_dir, "documents").filter(
+        F.col("doc_id") % 2 == 1
     )
-    batch = banded.filter(F.col("doc_id") % 2 == 1).select(
-        F.col("doc_id").alias("batch_id"), "band_id", "band_key"
-    )
+    if store:
+        ref_sets = store.read(spark, "shingle_sets")
+        ref = store.read(spark, "minhash_bands")
+        batch_sets = batch_docs.select(
+            "doc_id", _shingles(F.col("text")).alias("s")
+        ).localCheckpoint()
+        batch = _minhash_banded_from_sets(batch_sets)
+    else:
+        # shingle sets and the band table each feed two consumers
+        # (ref/batch splits; candidate + confirm joins) — materialize
+        # ONCE via the shared helper. At warehouse scale these are the
+        # persisted signature/band tables of the reference corpus.
+        ref_sets = batch_sets = _shingle_sets(spark, sf_dir)
+        banded = _minhash_banded_from_sets(ref_sets).localCheckpoint()
+        ref = banded.filter(F.col("doc_id") % 2 == 0)
+        batch = banded.filter(F.col("doc_id") % 2 == 1)
     cand = (
-        batch.join(ref, ["band_id", "band_key"])
+        batch.select(F.col("doc_id").alias("batch_id"), "band_id", "band_key")
+        .join(
+            ref.select(F.col("doc_id").alias("ref_id"), "band_id", "band_key"),
+            ["band_id", "band_key"],
+        )
         .select("batch_id", "ref_id")
         .dropDuplicates(["batch_id", "ref_id"])
     )
     pairs = (
-        cand.join(sets.select(F.col("doc_id").alias("batch_id"), F.col("s").alias("sh_b")), "batch_id")
-        .join(sets.select(F.col("doc_id").alias("ref_id"), F.col("s").alias("sh_r")), "ref_id")
+        cand.join(batch_sets.select(F.col("doc_id").alias("batch_id"), F.col("s").alias("sh_b")), "batch_id")
+        .join(ref_sets.select(F.col("doc_id").alias("ref_id"), F.col("s").alias("sh_r")), "ref_id")
     )
     inter = F.size(F.array_intersect("sh_b", "sh_r"))
     union = F.size(F.array_union("sh_b", "sh_r"))
@@ -990,11 +1022,9 @@ def incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("m.ref_id").alias("dup_of"),
         F.col("m.jaccard").alias("jaccard"),
     )
-    batch_docs = load_table_spread(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 2 == 1
-    ).select(F.col("doc_id").alias("batch_id"))
     return (
-        batch_docs.join(wit_j, "batch_id", "left")
+        batch_docs.select(F.col("doc_id").alias("batch_id"))
+        .join(wit_j, "batch_id", "left")
         .select(
             F.col("batch_id").alias("doc_id"),
             F.col("dup_of").isNull().alias("novel"),
@@ -1477,7 +1507,10 @@ def _simhash_fp_from_docs(docs: DataFrame) -> DataFrame:
     return votes.select("doc_id", pack("hhi").alias("sim_hi"), pack("hlo").alias("sim_lo"))
 
 
-def simhash_neardup_pairs(spark: SparkSession, sf_dir: str, wide: bool | None = None) -> DataFrame:
+def simhash_neardup_pairs(
+    spark: SparkSession, sf_dir: str, wide: bool | None = None,
+    store: Store | None = None,
+) -> DataFrame:
     """All pairs at hamming distance <= 3 over the 64-bit simhash —
     found without any pairwise corpus scan via block-split banding
     (the block-permuted simhash index of Manku et al., WWW'07): split
@@ -1493,7 +1526,8 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str, wide: bool | None = 
     the 20 C(6,3) block triples (~33-bit keys, collisions 20·n²/2^33 —
     bounded to ~10^9 docs). Same plan shape, same confirm step, and the
     brute-force oracle proves completeness under either layout. `wide`
-    forces a layout (tests exercise both); None = by corpus size."""
+    forces a layout (tests exercise both); None = by corpus size.
+    store: read the fingerprints from it (see _simhash_cached_fp)."""
     # Fingerprints are materialized once per (application, corpus)
     # (localCheckpoint — 3 longs/doc) so the band self-join's two sides
     # don't recompute the vote folds and repeat callers don't re-derive
@@ -1501,26 +1535,24 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str, wide: bool | None = 
     # table the dedup pipeline maintains (same session-memo pattern as
     # the shingle sets). The cached doc count rides along for the
     # layout switch.
-    sim, layout = _simhash_cached_fp(spark, sf_dir)
+    sim, layout = _simhash_cached_fp(spark, sf_dir, store)
     return _simhash_pairs_from_fp(sim, layout if wide is None else wide)
 
 
-def _simhash_cached_fp(spark: SparkSession, sf_dir: str):
+def _simhash_cached_fp(spark: SparkSession, sf_dir: str, store: Store | None = None):
     """(fingerprint table, wide-layout flag) — THE single source for
     every simhash consumer (complete pairs, capped pairs, overflow
     report): the persisted simhash_fp artifact with its MANIFEST-FROZEN
-    layout when SPARK_GRAFT_INDEX_DIR is set (all consumers band with
-    the same layout the store was written under, even at the
-    SIMHASH_WIDE_MIN_DOCS boundary), else the session-memoized
-    localCheckpoint with the corpus-count-derived layout."""
-    from .index_store import _read_artifact, persisted_root, read_manifest
+    layout when a store serves (`store`, or else index_store.store_for's
+    decision — all consumers band with the same layout the store was
+    written under, even at the SIMHASH_WIDE_MIN_DOCS boundary), else the
+    session-memoized localCheckpoint with the corpus-count-derived
+    layout."""
+    from .index_store import store_for
 
-    root = persisted_root(spark, sf_dir, "docs")
-    if root:
-        return (
-            _read_artifact(spark, root, "simhash_fp"),
-            read_manifest(root)["simhash_wide"],
-        )
+    store = store or store_for(spark, sf_dir, "docs")
+    if store:
+        return store.read(spark, "simhash_fp"), store.manifest["simhash_wide"]
 
     def build() -> tuple[DataFrame, int]:
         ck = simhash_fingerprint(spark, sf_dir).localCheckpoint()

@@ -26,15 +26,31 @@ threshold is crossed; flipping silently would make old and new rows
 un-joinable). tests/test_index_store.py proves refresh(delta) ==
 rebuild(full) artifact-for-artifact under the same frozen parameters.
 
-The *_from_index queries re-run the existing operators' pair/probe
-logic (shared helpers — _lsh_pairs_from_tables, _simhash_pairs_from_fp,
-_ivf_probe_topk, _srp_pairs_from_sigs) over the tables READ BACK from
-the store, and hash-match the original operators' DuckDB oracles
-verbatim: the persisted artifact provably carries the same information
-as the in-session build. Default root is a per-session temp dir (the
-driver owns no writable warehouse path); set SPARK_GRAFT_INDEX_DIR to
-persist across sessions — then a fresh session's query cost drops to
-read-only.
+The *_from_index queries are the in-session operators' own bodies
+run over the tables READ BACK from the store (each operator takes an
+optional `store` and reads its inputs from it), so they hash-match the
+original operators' DuckDB oracles verbatim: the persisted artifact
+provably carries the same information as the in-session build. Default
+root is a per-session temp dir (the driver owns no writable warehouse
+path); set SPARK_GRAFT_INDEX_DIR to persist across sessions — then a
+fresh session's query cost drops to read-only.
+
+store_for() is the one place that decides between live derivation and
+a store read. With require=False (the base neardup/ANN operators) it
+returns None — derive live — unless SPARK_GRAFT_INDEX_DIR is set and
+the full-corpus store carries the family, is unscoped, is at the
+current layout and is fresh. An old-layout store is left alone
+(upgrading it is the index path's decision, never a side effect of a
+serving query), and a corpus grown past the manifest watermark serves
+live, because a stale store would silently omit every pair involving
+the new rows; the freshness verdict is memoized on the corpus file
+listing and the manifest watermark, so both corpus growth and a
+refresh_index are seen by the next query. With require=True (the
+*_from_index twins) it is ensure_index, and a store whose manifest
+lacks the family fails loud with ValueError. Either way it returns a
+Store: one manifest snapshot whose watermark filters every artifact
+the query reads, so a refresh committing mid-query can never stamp
+one watermark onto rows filtered at another.
 
 Reference parity: the reference keeps no derived index tables (its
 dedup surface is per-key Flink state, RT/app/dwm2/UV2.java:61-112);
@@ -48,6 +64,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,11 +74,12 @@ from ..memo import session_memo
 from .dedup import (
     N_BANDS,
     SIMHASH_WIDE_MIN_DOCS,
-    _lsh_pairs_from_tables,
     _minhash_banded_from_sets,
     _shingles,
-    _simhash_pairs_from_fp,
+    incremental_neardup,
+    minhash_lsh_pairs,
     simhash_fingerprint,
+    simhash_neardup_pairs,
 )
 from .similarity import (
     N_QUERIES,
@@ -72,14 +90,22 @@ from .similarity import (
     _srp_tables_case_sql,
     _assign_cells,
     _ivf_cached_centroids,
-    _ivf_probe_topk,
     _pq_codes_expr,
     _rank_sketch,
-    _srp_pairs_from_sigs,
     _srp_signature,
+    ann_ivf_multiprobe,
+    ann_ivf_topk,
+    ann_ivfpq_topk,
+    embedding_neardup_multiprobe_wide,
+    embedding_neardup_pairs,
+    knn_graph_wide,
+    knn_graph_wide_capped,
+    semantic_decontaminate_band,
+    semantic_decontaminate_wide,
     srp_bits_for,
     srp_tables_for,
 )
+from .text import bpe_doc_tokens
 
 MANIFEST = "MANIFEST.json"
 
@@ -87,7 +113,7 @@ MANIFEST = "MANIFEST.json"
 # an artifact gains/changes a COLUMN the readers depend on (a new
 # directory is already caught by the _FAMILY_ARTIFACTS dir check):
 # a store published at an older version fails _layout_current, so
-# ensure_index rebuilds/swap-upgrades it and persisted_root serves live
+# ensure_index rebuilds/swap-upgrades it and store_for serves live
 # until then — readers can never select a column an old store lacks.
 #   v2 (r13): srp_sigs_wide carries the 48-bit ranking sketch `rs`.
 _LAYOUT_VERSION = 2
@@ -453,6 +479,7 @@ def read_manifest(root: str) -> dict:
 
 _DOC_ARTIFACTS = ("shingle_sets", "minhash_bands", "simhash_fp", "bpe_vocab")
 _VEC_ARTIFACTS = ("ivf_cells", "pq_codes", "srp_sigs", "srp_sigs_wide")
+_VEC_ARTIFACT_SET = set(_VEC_ARTIFACTS)
 
 
 def _heal_uncommitted(root: str, m: dict) -> None:
@@ -511,7 +538,7 @@ def refresh_index(
             "doc_scope/vec_scope so refresh can enforce it."
         )
     _heal_uncommitted(root, m)
-    fams = set(m.get("families", ("docs", "vecs", "bpe")))
+    fams = set(m.get("families", _ALL_FAMILIES))
     doc_scope_pred = _scope_pred(m.get("doc_scope"), "doc_id")
     vec_scope_pred = _scope_pred(m.get("vec_scope"), "vec_id")
     new_docs = load_table_spread(spark, sf_dir, "documents").filter(
@@ -541,7 +568,7 @@ def refresh_index(
             # the stored vocab keep their stored segmentation
             from .text import _bpe_apply_rules, _bpe_vocab_from_docs
 
-            stored_toks = _read_artifact(spark, root, "bpe_vocab").select("tok")
+            stored_toks = Store(root, m).read(spark, "bpe_vocab").select("tok")
             new_vocab = _bpe_vocab_from_docs(new_docs).join(
                 stored_toks, "tok", "left_anti"
             )
@@ -575,10 +602,12 @@ _FAMILY_ARTIFACTS = {
     "vecs": _VEC_ARTIFACTS,
     "bpe": ("bpe_vocab",),
 }
+_ALL_FAMILIES = tuple(_FAMILY_ARTIFACTS)
 
 
-def _layout_current(root: str) -> bool:
-    """True iff the store at root carries a readable manifest AND every
+def _layout_current(root: str) -> dict | None:
+    """The manifest of the store at root — None unless it is readable AND
+    the store carries every
     artifact directory the CURRENT code derives for its families
     (_FAMILY_ARTIFACTS — the general mechanism, so the NEXT
     artifact-adding round inherits the upgrade path instead of
@@ -593,21 +622,22 @@ def _layout_current(root: str) -> bool:
     try:
         m = read_manifest(root)
     except Exception:
-        return False
+        return None
     # pre-v2 manifests carry no layout key — default 1, never current
     if m.get("layout", 1) != _LAYOUT_VERSION:
-        return False
-    fams = set(m.get("families", ("docs", "vecs", "bpe")))
-    return all(
+        return None
+    fams = set(m.get("families", _ALL_FAMILIES))
+    current = all(
         os.path.isdir(f"{root}/{art}")
         for fam in fams
         for art in _FAMILY_ARTIFACTS.get(fam, ())
     )
+    return m if current else None
 
 
 def _shared_root_path(base: str, sf_dir: str, variant: str) -> str:
     """The stable shared-store path under SPARK_GRAFT_INDEX_DIR — one
-    derivation shared by ensure_index and persisted_root's pre-check."""
+    derivation shared by ensure_index and store_for's pre-check."""
     return os.path.join(base, sf_dir.strip("/").replace("/", "_"), variant)
 
 
@@ -657,7 +687,7 @@ def _open_root(spark: SparkSession, sf_dir: str, variant: str, build_kwargs: dic
     if has_manifest and _layout_current(root):
         pass  # adopt as-is
         # NOTE: no _heal_uncommitted here — readers never see
-        # above-watermark partitions (_read_artifact filters them), and
+        # above-watermark partitions (Store.read filters them), and
         # deleting them from a reader would race a concurrent
         # refresh_index mid-write. The destructive heal belongs to the
         # refresh owner alone.
@@ -773,7 +803,7 @@ def compact_index(spark: SparkSession, root: str) -> dict[str, int]:
         src = f"{root}/{name}"
         if not os.path.isdir(src):
             continue
-        # family watermark by the SAME membership _read_artifact uses —
+        # family watermark by the SAME membership Store.read uses —
         # a hand-listed tuple here once omitted srp_sigs_wide, folding
         # it into ingest=<doc_watermark>, which the vec-watermark read
         # filter then excluded ENTIRELY when doc_wm > vec_wm (silent
@@ -867,46 +897,64 @@ def _resume_ledger_compact(ledger: str) -> None:
     os.remove(marker)
 
 
-def persisted_root(spark: SparkSession, sf_dir: str, family: str) -> str | None:
-    """The opportunistic warm-path switch for the BASE neardup/ANN
-    queries (VERDICT r7 #7): when SPARK_GRAFT_INDEX_DIR is set, default
-    to ensure_index — first use builds the store once, every later
-    session (and every later query in this one) reads partitioned
-    parquet artifacts instead of re-deriving session memos. Returns
-    None (zero behavior change) when the env is unset, the full store
-    doesn't carry `family` / isn't a full-corpus build, or the corpus
-    has GROWN past the manifest watermark — a stale store would
-    silently omit every pair/neighbor involving the new rows, so the
-    read path falls back to live derivation and leaves the refresh to
-    the maintenance owner (read paths never mutate shared state). The
-    freshness check is one max() scan per (session, store, family,
-    corpus-file signature) — a corpus mutation invalidates the memo, so
-    mid-session growth is seen by the very next query.
+class Store(NamedTuple):
+    """One manifest snapshot of a built index store (see store_for)."""
 
-    OLD-LAYOUT stores are likewise left alone (ADVICE r9): a published
-    manifest that fails _layout_current means a PREVIOUS engine version
-    owns this root — ensure_index would rebuild and atomically swap it,
-    which from a pure read path could race that version's maintenance
-    jobs (refresh/compact) mid-write during a mixed-version rollout.
-    The reader returns None (live derivation, correct at any layout)
-    and the upgrade happens on the first explicit index access
-    (ensure_index via a from_index query or the maintenance job) —
-    i.e. the takeover is an owner/index-path decision, never a side
-    effect of a serving query going warm. A mid-swap crashed
-    compaction reads the same way from here (artifact dir absent →
-    not layout-current → None): the reader serves live instead of
-    running _repair_compact, which is also a shared-state mutation —
-    the heal, like the upgrade, belongs to the explicit index path."""
+    root: str
+    manifest: dict
+
+    def read(self, spark: SparkSession, name: str) -> DataFrame:
+        """Watermark-filtered artifact read: only ingest partitions at or
+        below this manifest's watermark are COMMITTED — a concurrent or
+        crashed refresh's higher-tagged partitions are invisible to
+        readers (partition-pruned filter, zero data cost). This makes
+        reads safe against in-flight maintenance WITHOUT deleting
+        anything: the destructive heal runs only inside refresh_index,
+        which — like compact_index — is a single-owner maintenance job."""
+        wm_key = "vec_watermark" if name in _VEC_ARTIFACT_SET else "doc_watermark"
+        return spark.read.parquet(f"{self.root}/{name}").filter(
+            F.col("ingest") <= self.manifest[wm_key]
+        )
+
+    @property
+    def tag(self) -> str:
+        """`store:{root}:{vec_watermark}`, the memo tag of vector rows read
+        through this snapshot."""
+        return f"store:{self.root}:{self.manifest['vec_watermark']}"
+
+
+def store_for(
+    spark: SparkSession, sf_dir: str, family: str, *, require: bool = False,
+    variant: str = "full", **build_kwargs,
+) -> Store | None:
+    """The index store a query over `family` ("docs", "vecs" or "bpe")
+    reads, or None to derive live — the policy is the module
+    docstring's store_for paragraph. require=True is the *_from_index
+    path: ensure_index(variant, **build_kwargs), then ValueError if the
+    manifest lacks the family. Once ensure_index's memo holds the root,
+    every path reads the manifest once."""
+    if require:
+        root = ensure_index(spark, sf_dir, variant, **build_kwargs)
+        m = read_manifest(root)
+        if family not in m.get("families", _ALL_FAMILIES):
+            raise ValueError(
+                f"index store {root} has no {family!r} family; rebuild it with that family"
+            )
+        return Store(root, m)
     base = os.environ.get("SPARK_GRAFT_INDEX_DIR")
     if not base:
         return None
     shared = _shared_root_path(base, sf_dir, "full")
-    if os.path.exists(f"{shared}/{MANIFEST}") and not _layout_current(shared):
-        return None
+    m = None
+    if os.path.exists(f"{shared}/{MANIFEST}"):
+        m = _layout_current(shared)
+        if m is None:
+            return None
     root = ensure_index(spark, sf_dir)
-    m = read_manifest(root)
+    if m is None or root != shared:  # built just now, or memoized under another base
+        m = read_manifest(root)
     if (
-        family not in m.get("families", ())
+        family not in m.get("families", _ALL_FAMILIES)
         or m.get("doc_scope")
         or m.get("vec_scope")
         or m.get("opaque_pred")
@@ -922,65 +970,30 @@ def persisted_root(spark: SparkSession, sf_dir: str, family: str) -> str | None:
         cur = load_table_spread(spark, sf_dir, table).agg(F.max(id_col)).first()[0]
         return cur is None or cur <= m[wm_key]
 
-    # the verdict is NOT once-per-session (ADVICE r8: a corpus that
-    # grows mid-session, or an external writer's append, must flip it
-    # on the NEXT query, or warm reads silently omit every
-    # pair/neighbor involving the new rows). Its version is the
-    # corpus's recursive file listing — os.stat in this process, no Spark
-    # job — so any file added, replaced, or rewritten in place (even
-    # inside a date=X/ subdirectory) forces one fresh max() scan, and
-    # the new verdict replaces the superseded one
-    listing = (table, _listing(f"{sf_dir}/{table}.parquet"))
-    is_fresh = session_memo(spark, "fresh", (root, family), fresh, version=listing)
-    return root if is_fresh else None
-
-
-_VEC_ARTIFACT_SET = set(_VEC_ARTIFACTS)
-
-
-def _read_artifact(
-    spark: SparkSession, root: str, name: str, m: dict | None = None
-) -> DataFrame:
-    """Watermark-filtered artifact read: only ingest partitions at or
-    below the manifest watermark are COMMITTED — a concurrent or
-    crashed refresh's higher-tagged partitions are invisible to
-    readers (partition-pruned filter, zero data cost). This makes
-    reads safe against in-flight maintenance WITHOUT deleting anything:
-    the destructive heal runs only inside refresh_index, which — like
-    compact_index — is a single-owner maintenance job."""
-    wm_key = "vec_watermark" if name in _VEC_ARTIFACT_SET else "doc_watermark"
-    wm = (m or read_manifest(root))[wm_key]
-    return spark.read.parquet(f"{root}/{name}").filter(F.col("ingest") <= wm)
-
-
-def _read_bands(spark: SparkSession, root: str) -> DataFrame:
-    return _read_artifact(spark, root, "minhash_bands").select(
-        "doc_id", "band_id", "band_key"
-    )
-
-
-def _read_sets(spark: SparkSession, root: str) -> DataFrame:
-    return _read_artifact(spark, root, "shingle_sets").select("doc_id", "s")
+    # os.stat listing, no Spark job: any corpus file added, replaced or
+    # rewritten in place forces one fresh max() scan, and so does a
+    # refresh_index that moves the watermark
+    version = (table, _listing(f"{sf_dir}/{table}.parquet"), m[wm_key])
+    if not session_memo(spark, "fresh", (root, family), fresh, version=version):
+        return None
+    return Store(root, m)
 
 
 def minhash_lsh_pairs_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """minhash_lsh_pairs over the PERSISTED band + shingle-set tables —
-    same pair logic (shared helper), same oracle, but the query reads
-    partitioned parquet instead of deriving signatures: the fresh-
-    session cost of the whole LSH family drops to the one-time build
-    (or to pure reads under SPARK_GRAFT_INDEX_DIR)."""
-    root = ensure_index(spark, sf_dir)
-    return _lsh_pairs_from_tables(_read_bands(spark, root), _read_sets(spark, root))
+    same body, same oracle, but the query reads partitioned parquet
+    instead of deriving signatures: the fresh-session cost of the whole
+    LSH family drops to the one-time build (or to pure reads under
+    SPARK_GRAFT_INDEX_DIR)."""
+    return minhash_lsh_pairs(spark, sf_dir, store_for(spark, sf_dir, "docs", require=True))
 
 
 def simhash_neardup_pairs_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """simhash_neardup_pairs over the persisted fingerprint table; the
     banding layout comes FROZEN from the manifest, not re-derived — old
     and new fingerprints always band identically."""
-    root = ensure_index(spark, sf_dir)
-    m = read_manifest(root)
-    sim = _read_artifact(spark, root, "simhash_fp")
-    return _simhash_pairs_from_fp(sim, m["simhash_wide"])
+    store = store_for(spark, sf_dir, "docs", require=True)
+    return simhash_neardup_pairs(spark, sf_dir, store=store)
 
 
 def ann_ivf_topk_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -990,95 +1003,17 @@ def ann_ivf_topk_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONLY the probed cell's partition (partition pruning over the
     written layout — the disk form of the localCheckpoint pruning
     tests/test_ivf_partition_pruning.py asserts)."""
-    root = ensure_index(spark, sf_dir)
-    m = read_manifest(root)
-    cells = _read_artifact(spark, root, "ivf_cells").select(
-        "corpus_id", "c_emb", "c_norm", "cell"
-    )
-    queries = (
-        load_table_spread(spark, sf_dir, "embeddings")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("q_emb"),
-        )
-        .filter(F.col("query_id") < N_QUERIES)
-    )
-    return _ivf_probe_topk(cells, queries, m["centroids"])
+    return ann_ivf_topk(spark, sf_dir, store_for(spark, sf_dir, "vecs", require=True))
 
 
 def ann_ivfpq_topk_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ann_ivfpq_topk over the persisted index: cells AND 4-bit PQ code
     words read from their co-partitioned partitionBy(cell) tables,
-    codebooks/quantizer loaded from the manifest. The probe prunes both
-    reads to one cell; reconstruction is a literal-map lookup of the
-    STORED codes (no distance computation at read time — the write-time
-    encode paid it once); the ADC shortlist joins back to the full-
-    precision cells rows for the exact rerank. Oracle: ann_ivfpq_topk's
+    codebooks/quantizer loaded from the manifest; reconstruction is a
+    literal-map lookup of the STORED codes (the write-time encode paid
+    the distance computation once). Oracle: ann_ivfpq_topk's
     verbatim."""
-    from pyspark.sql import Window
-
-    from .similarity import (
-        PQ_SHORTLIST, TOP_K, _dot, _norm, _pq_recon_from_codes, _probe_cells,
-    )
-
-    root = ensure_index(spark, sf_dir)
-    m = read_manifest(root)
-    cells = _read_artifact(spark, root, "ivf_cells").select(
-        "corpus_id", "c_emb", "c_norm", "cell"
-    )
-    codes = _read_artifact(spark, root, "pq_codes").select(
-        "corpus_id", "codes", "cell"
-    )
-    queries = (
-        load_table_spread(spark, sf_dir, "embeddings")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("q_emb"),
-        )
-        .filter(F.col("query_id") < N_QUERIES)
-    )
-    probed = _probe_cells(queries, m["centroids"], 1).select(
-        "query_id", "q_emb", "q_norm", F.col("cell").alias("probe_cell")
-    )
-    probed_codes = codes.join(
-        F.broadcast(probed), codes.cell == probed.probe_cell, "inner"
-    )
-    recon = _pq_recon_from_codes(m["pq_books"], F.col("codes"))
-    adc = F.round(
-        _dot(F.col("q_emb"), F.col("r_emb")) / (F.col("q_norm") * _norm(F.col("r_emb"))), 6
-    )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("adc_cosine"), F.asc("corpus_id"))
-    shortlist = (
-        probed_codes.withColumn("r_emb", recon)
-        .select(
-            "query_id", "probe_cell", "corpus_id", "q_emb", "q_norm",
-            adc.alias("adc_cosine"),
-        )
-        .withColumn("crank", F.row_number().over(wc))
-        .filter(F.col("crank") <= PQ_SHORTLIST)
-    )
-    exact = F.round(
-        _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm")), 6
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        # rerank join keeps the cell equi-condition so the second
-        # ivf_cells read is ALSO pruned to the probed partition —
-        # without it the shortlist's corpus_id join scans every cell
-        # and rerank cost grows with the corpus
-        shortlist.join(
-            cells,
-            (shortlist.corpus_id == cells.corpus_id)
-            & (shortlist.probe_cell == cells.cell),
-        )
-        .select(
-            shortlist.query_id, "probe_cell", shortlist.corpus_id,
-            "adc_cosine", exact.alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "probe_cell", "rank", "corpus_id", "cosine", "adc_cosine")
-    )
+    return ann_ivfpq_topk(spark, sf_dir, store_for(spark, sf_dir, "vecs", require=True))
 
 
 def ann_ivf_multiprobe_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1087,40 +1022,8 @@ def ann_ivf_multiprobe_from_index(spark: SparkSession, sf_dir: str) -> DataFrame
     with the manifest's trained quantizer — two pruned directory reads
     instead of one, the recall/cost dial turned on the disk layout.
     Oracle: ann_ivf_multiprobe's verbatim."""
-    from pyspark.sql import Window
-
-    from .similarity import N_PROBE, TOP_K, _dot, _probe_cells
-
-    root = ensure_index(spark, sf_dir)
-    m = read_manifest(root)
-    cells = _read_artifact(spark, root, "ivf_cells").select(
-        "corpus_id", "c_emb", "c_norm", "cell"
-    )
-    queries = (
-        load_table_spread(spark, sf_dir, "embeddings")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("q_emb"),
-        )
-        .filter(F.col("query_id") < N_QUERIES)
-    )
-    probed = _probe_cells(queries, m["centroids"], N_PROBE).select(
-        "query_id", "q_emb", "q_norm", F.col("cell").alias("probe_cell")
-    )
-    scored = cells.join(
-        F.broadcast(probed), cells.cell == probed.probe_cell, "inner"
-    ).select(
-        "query_id", "corpus_id", "cell",
-        F.round(
-            _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm")), 6
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "corpus_id", F.col("cell").alias("from_cell"), "cosine")
-    )
+    store = store_for(spark, sf_dir, "vecs", require=True)
+    return ann_ivf_multiprobe(spark, sf_dir, store)
 
 
 def index_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1162,89 +1065,40 @@ def index_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_neardup_pairs_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embedding_neardup_pairs over the persisted partitionBy(table_id)
     SRP signature table, width frozen in the manifest."""
-    root = ensure_index(spark, sf_dir)
-    sigs = _read_artifact(spark, root, "srp_sigs").select(
-        "vec_id", "v", "table_id", "sig"
-    )
-    return _srp_pairs_from_sigs(sigs)
-
-
-def _wide_sigs_from_store(spark: SparkSession, sf_dir: str):
-    """(sigs, masks, source) from the persisted wide signature layout —
-    THE store-read path shared by every wide from_index twin and by
-    similarity._srp_wide_sigs' warm branch, so a change to the wide
-    artifact's columns or mask derivation happens in exactly one
-    place. source = `store:{root}:{vec_watermark}` is the memo tag of
-    these rows: the filter, the masks and the tag come from ONE
-    manifest read, so a refresh committing between reads can never
-    stamp one watermark onto rows filtered at another."""
-    from .similarity import SRP_WIDE_RADIUS, _srp_probe_masks
-
-    root = ensure_index(spark, sf_dir)
-    m = read_manifest(root)
-    sigs = _read_artifact(spark, root, "srp_sigs_wide", m).select(
-        "vec_id", "v", "table_id", "sig"
-    )
-    masks = _srp_probe_masks(m["srp_bits"], SRP_WIDE_RADIUS)
-    return sigs, masks, f"store:{root}:{m['vec_watermark']}"
-
-
-def _slim_wide_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, table_id, sig, rs) straight off the persisted layout-v2
-    wide artifact — the capped graph's slim relation as a plain
-    watermark-filtered read (VERDICT r12 #5): no 48-plane recompute, no
-    localCheckpoint to lose with an executor (recompute = re-read)."""
-    root = ensure_index(spark, sf_dir)
-    return _read_artifact(spark, root, "srp_sigs_wide").select(
-        "vec_id", "table_id", "sig", "rs"
-    )
+    store = store_for(spark, sf_dir, "vecs", require=True)
+    return embedding_neardup_pairs(spark, sf_dir, store)
 
 
 def embedding_neardup_wide_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embedding_neardup_multiprobe_wide over the PERSISTED wide
     signature layout: the production serving shape of the r9 governor —
     build srp_tables_for(width) tables once, every query thereafter is
-    a partition-pruned read + the hamming<=1 probe join. Same helper
-    (_multiprobe_pairs_from), same oracle as the in-session wide form —
-    the proof the persisted layout carries identical information. The
-    confirmed-pair memo is shared with the in-session wide consumers
-    under the same store tag (they read the same sigs when the store
-    is live — _srp_wide_sigs_tagged)."""
-    from .similarity import (
-        NEARDUP_COSINE, _mp_confirmed_memo, _multiprobe_pairs_from,
-    )
-
-    sigs, masks, source = _wide_sigs_from_store(spark, sf_dir)
-    conf = _mp_confirmed_memo(spark, sf_dir, f"wide:{source}", sigs, masks)
-    return _multiprobe_pairs_from(sigs, masks, NEARDUP_COSINE, confirmed=conf)
+    a partition-pruned read + the hamming<=1 probe join. Same body,
+    same oracle as the in-session wide form — the proof the persisted
+    layout carries identical information. The confirmed-pair memo is
+    shared with the in-session wide consumers under the same store tag
+    (they read the same sigs when the store is live)."""
+    store = store_for(spark, sf_dir, "vecs", require=True)
+    return embedding_neardup_multiprobe_wide(spark, sf_dir, store)
 
 
 def knn_graph_wide_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """knn_graph_wide over the persisted wide signature layout — graph
     construction as a store read: partition-pruned srp_sigs_wide scan +
-    the shared undirected probe/confirm + mirror/rank plan
-    (_knn_graph_from_sigs), same oracle as the in-session form."""
-    from .similarity import _knn_graph_from_sigs, _mp_confirmed_memo
-
-    sigs, masks, source = _wide_sigs_from_store(spark, sf_dir)
-    conf = _mp_confirmed_memo(spark, sf_dir, f"wide:{source}", sigs, masks)
-    return _knn_graph_from_sigs(sigs, masks, confirmed=conf)
+    the shared undirected probe/confirm + mirror/rank plan, same oracle
+    as the in-session form."""
+    return knn_graph_wide(spark, sf_dir, store_for(spark, sf_dir, "vecs", require=True))
 
 
 def knn_graph_capped_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """knn_graph_wide_capped over the persisted wide signature layout:
     the r10 sketch-ranked confirm budget as a store read — since layout
     v2 the store carries the ranking sketch as the `rs` column, so the
-    slim relation is _slim_wide_from_store's plain read (no per-session
-    recompute, no lineage truncation to lose with an executor); same
-    oracle as the in-session form."""
-    from .similarity import KNN_CAND_CAP, _knn_graph_capped_from_sigs
-
-    sigs, masks, _source = _wide_sigs_from_store(spark, sf_dir)
-    return _knn_graph_capped_from_sigs(
-        sigs, masks, KNN_CAND_CAP,
-        slim=_slim_wide_from_store(spark, sf_dir),
-    )
+    slim relation is a plain read (no per-session recompute, no lineage
+    truncation to lose with an executor); same oracle as the
+    in-session form."""
+    store = store_for(spark, sf_dir, "vecs", require=True)
+    return knn_graph_wide_capped(spark, sf_dir, store)
 
 
 # The capped k-NN graph as a DERIVED TABLE of the store (VERDICT r10
@@ -1465,16 +1319,8 @@ def semantic_decontaminate_band_from_index(
     """semantic_decontaminate_band over the persisted wide signature
     layout: the design-band production screen as a store read; same
     oracle as the in-session band form."""
-    from .similarity import (
-        SEM_DECON_BAND_DROP, SEM_DECON_BAND_REVIEW, _sem_decon_wide_from_sigs,
-    )
-
-    sigs, masks, _source = _wide_sigs_from_store(spark, sf_dir)
-    return _sem_decon_wide_from_sigs(
-        sigs, masks,
-        review_cosine=SEM_DECON_BAND_REVIEW,
-        drop_cosine=SEM_DECON_BAND_DROP,
-    )
+    store = store_for(spark, sf_dir, "vecs", require=True)
+    return semantic_decontaminate_band(spark, sf_dir, store)
 
 
 def semantic_decontaminate_wide_from_index(
@@ -1485,10 +1331,8 @@ def semantic_decontaminate_wide_from_index(
     derive fresh from the store's own bench signatures and broadcast
     against the stored corpus table; same oracle as the in-session
     form."""
-    from .similarity import _sem_decon_wide_from_sigs
-
-    sigs, masks, _source = _wide_sigs_from_store(spark, sf_dir)
-    return _sem_decon_wide_from_sigs(sigs, masks)
+    store = store_for(spark, sf_dir, "vecs", require=True)
+    return semantic_decontaminate_wide(spark, sf_dir, store)
 
 
 def incremental_neardup_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1499,64 +1343,13 @@ def incremental_neardup_from_index(spark: SparkSession, sf_dir: str) -> DataFram
     batch never touches reference text, which is the property that
     makes a 100 TB reference corpus affordable to screen against daily.
     Same output and oracle as incremental_neardup (which derives both
-    sides in-session)."""
-    from .dedup import JACCARD_THRESHOLD
-
-    root = ensure_index(
-        spark, sf_dir, variant="ref_even",
-        doc_scope=("mod", 2, 0),  # serializable membership rule: the
-                                  # manifest records it and refresh_index
-                                  # reapplies it to every delta
-        families=("docs",),  # this screen reads bands+sets only — no
-                             # quantizer/codebook/tokenizer training
-    )
-    ref_bands = _read_bands(spark, root).select(
-        F.col("doc_id").alias("ref_id"), "band_id", "band_key"
-    )
-    ref_sets = _read_sets(spark, root).select(
-        F.col("doc_id").alias("ref_id"), F.col("s").alias("sh_r")
-    )
-    batch_docs = load_table_spread(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 2 == 1
-    )
-    batch_sets = batch_docs.select(
-        "doc_id", _shingles(F.col("text")).alias("s")
-    ).localCheckpoint()
-    batch_bands = _minhash_banded_from_sets(batch_sets).select(
-        F.col("doc_id").alias("batch_id"), "band_id", "band_key"
-    )
-    cand = (
-        batch_bands.join(ref_bands, ["band_id", "band_key"])
-        .select("batch_id", "ref_id")
-        .dropDuplicates(["batch_id", "ref_id"])
-    )
-    pairs = cand.join(
-        batch_sets.select(F.col("doc_id").alias("batch_id"), F.col("s").alias("sh_b")),
-        "batch_id",
-    ).join(ref_sets, "ref_id")
-    inter = F.size(F.array_intersect("sh_b", "sh_r"))
-    union = F.size(F.array_union("sh_b", "sh_r"))
-    jac = (inter.cast("decimal(18,6)") / union).cast("decimal(9,6)")
-    good = pairs.select("batch_id", "ref_id", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= JACCARD_THRESHOLD
-    )
-    wit = good.groupBy("batch_id").agg(
-        F.min_by(F.struct("ref_id", "jaccard"), "ref_id").alias("m")
-    ).select(
-        "batch_id",
-        F.col("m.ref_id").alias("dup_of"),
-        F.col("m.jaccard").alias("jaccard"),
-    )
-    return (
-        batch_docs.select(F.col("doc_id").alias("batch_id"))
-        .join(wit, "batch_id", "left")
-        .select(
-            F.col("batch_id").alias("doc_id"),
-            F.col("dup_of").isNull().alias("novel"),
-            "dup_of",
-            "jaccard",
-        )
-    )
+    sides in-session). The variant's doc_scope is a serializable
+    membership rule: the manifest records it and refresh_index
+    reapplies it to every delta; it builds the docs family only — no
+    quantizer/codebook/tokenizer training."""
+    store = store_for(spark, sf_dir, "docs", require=True, variant="ref_even",
+                      doc_scope=("mod", 2, 0), families=("docs",))
+    return incremental_neardup(spark, sf_dir, store)
 
 
 def bpe_doc_tokens_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1566,32 +1359,7 @@ def bpe_doc_tokens_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     collects — applying a shipped tokenizer is a broadcast-join lookup,
     exactly how production tokenization runs. Oracle: bpe_doc_tokens'
     verbatim."""
-    from ..functions import tokenize
-    from .text import BPE_DOC_MOD
-
-    root = ensure_index(spark, sf_dir)
-    vocab = _read_artifact(spark, root, "bpe_vocab")
-    pieces = vocab.select(
-        "tok", F.size(F.split(F.trim(F.col("syms")), " ")).alias("n_pieces")
-    )
-    docs = load_table_spread(spark, sf_dir, "documents")
-    toks = (
-        docs.filter(F.col("doc_id") % BPE_DOC_MOD == 0)
-        .select("doc_id", F.explode(tokenize("text")).alias("tok"))
-    )
-    ratio = F.round(
-        F.col("piece_ct").cast("double") / F.col("word_ct").cast("double"), 6
-    )
-    return (
-        toks.join(F.broadcast(pieces), "tok")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("word_ct"),
-            F.sum("n_pieces").alias("piece_ct"),
-        )
-        .select("doc_id", "word_ct", "piece_ct", ratio.alias("pieces_per_word"))
-        .orderBy("doc_id")
-    )
+    return bpe_doc_tokens(spark, sf_dir, store_for(spark, sf_dir, "bpe", require=True))
 
 
 def index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

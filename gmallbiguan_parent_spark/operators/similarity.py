@@ -14,12 +14,16 @@ oracle (same arithmetic, same order) hash-matches.
 from __future__ import annotations
 
 import hashlib
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table, load_table_spread
 from ..memo import session_memo
+
+if TYPE_CHECKING:
+    from .index_store import Store
 
 N_QUERIES = 8     # vec_id < 8 are the query vectors
 TOP_K = 5
@@ -459,7 +463,9 @@ def _ivf_corpus_queries(spark: SparkSession, sf_dir: str):
     return corpus, queries
 
 
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def ann_ivf_topk(
+    spark: SparkSession, sf_dir: str, store: Store | None = None
+) -> DataFrame:
     """IVF ANN (the 100 TB scale path): corpus vectors are bucketed into
     inverted lists by a TRAINED coarse quantizer (spherical k-means,
     nlist ∝ corpus — see _ivf_centroids), each list summarized by its
@@ -472,19 +478,29 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOTE: constructing this query trains the quantizer (one count + one
     sample collect, then driver-side Lloyd rounds) — DataFrame
     construction is eager here, like the SRP width derivation in
-    embedding_neardup_pairs."""
-    from .index_store import persisted_root
+    embedding_neardup_pairs.
 
-    if persisted_root(spark, sf_dir, "vecs"):
-        # warm environment: the trained quantizer comes from the
-        # manifest and the assignment from the partitionBy(cell) layout
-        from .index_store import ann_ivf_topk_from_index
+    store: read the quantizer and the assignment from it (the
+    *_from_index twin passes one); None lets index_store.store_for
+    decide."""
+    from .index_store import store_for
 
-        return ann_ivf_topk_from_index(spark, sf_dir)
+    store = store or store_for(spark, sf_dir, "vecs")
+    return _ivf_probe_topk(*_ivf_inputs(spark, sf_dir, store))
+
+
+def _ivf_inputs(spark: SparkSession, sf_dir: str, store: Store | None):
+    """(cells, queries, centroids) for the IVF probes: the store's
+    partitionBy(cell) assignment and manifest quantizer (a warm store:
+    no training, and the probe reads only the probed cell's partition),
+    or, with store None, the session-memoized trained quantizer and
+    assignment."""
     corpus, queries = _ivf_corpus_queries(spark, sf_dir)
+    if store:
+        cells = store.read(spark, "ivf_cells").select("corpus_id", "c_emb", "c_norm", "cell")
+        return cells, queries, store.manifest["centroids"]
     cent = _ivf_cached_centroids(spark, sf_dir, corpus)
-    cells = _cached_cells(spark, sf_dir, corpus, cent)
-    return _ivf_probe_topk(cells, queries, cent)
+    return _cached_cells(spark, sf_dir, corpus, cent), queries, cent
 
 
 def _ivf_probe_topk(cells: DataFrame, queries: DataFrame, cent) -> DataFrame:
@@ -567,7 +583,9 @@ def ann_truncated_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_PROBE = 2
 
 
-def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
+def ann_ivf_multiprobe(
+    spark: SparkSession, sf_dir: str, store: Store | None = None
+) -> DataFrame:
     """Multi-probe IVF (the recall lever over ann_ivf_topk): each query
     probes its N_PROBE nearest centroids' lists instead of one. The
     standard accuracy/cost dial — recall loss of single-probe IVF comes
@@ -577,10 +595,10 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     full scan). Plan shape is identical to single-probe: the probed
     (query, cell) table stays tiny and broadcasts onto the
     cell-partitioned corpus. Same trained quantizer as ann_ivf_topk
-    (eager construction — see that docstring)."""
-    corpus, queries = _ivf_corpus_queries(spark, sf_dir)
-    cent = _ivf_cached_centroids(spark, sf_dir, corpus)
-    cells = _cached_cells(spark, sf_dir, corpus, cent)
+    (eager construction — see that docstring). store: read the
+    quantizer and the assignment from it (the *_from_index twin); None
+    derives live."""
+    cells, queries, cent = _ivf_inputs(spark, sf_dir, store)
     probed = _probe_cells(queries, cent, N_PROBE).select(
         "query_id", "q_emb", "q_norm", F.col("cell").alias("probe_cell")
     )
@@ -1072,7 +1090,9 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def knn_graph_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
+def knn_graph_wide(
+    spark: SparkSession, sf_dir: str, store: Store | None = None
+) -> DataFrame:
     """knn_graph on the WIDE recall-governed layout (ADVICE r9: the last
     home-bucket-only SRP consumers routed onto srp_tables_for-sized
     signatures): candidates are bucket-mates within hamming<=1 in any of
@@ -1089,8 +1109,9 @@ def knn_graph_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-table repeats BEFORE any vector math; vectors join back once per
     distinct edge for a single cosine; the per-source top-K window runs
     over ~bucket-sized candidate sets. Shuffles: the probe join + the
-    src window — same count as the base form."""
-    sigs, masks, source = _srp_wide_sigs_tagged(spark, sf_dir)
+    src window — same count as the base form. store: as
+    _srp_wide_sigs_tagged."""
+    sigs, masks, source = _srp_wide_sigs_tagged(spark, sf_dir, store)
     return _knn_graph_from_sigs(
         sigs, masks,
         confirmed=_mp_confirmed_memo(spark, sf_dir, f"wide:{source}", sigs, masks),
@@ -1190,8 +1211,8 @@ def _knn_slim_memo(
     48-plane sketch and re-checkpointed the join (~1.5-2 s per call at
     sf0.1, pure rebuild of a value that never changes within a
     session); since r13 the persisted signature artifact carries rs as
-    a column and the store path reads it directly (index_store.
-    _slim_wide_from_store), so this memo serves the LIVE branch.
+    a column and the store path reads it directly, so this memo serves
+    the LIVE branch.
     live and store entries coexist (ADVICE r12: a session alternating
     a live-branch call with a from_index twin must not thrash the
     corpus-sized checkpoint): they are separate slots, and the source
@@ -1215,7 +1236,9 @@ def _knn_slim_memo(
     return session_memo(spark, "knn_slim", (sf_dir, kind), build, version=source)
 
 
-def knn_graph_wide_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
+def knn_graph_wide_capped(
+    spark: SparkSession, sf_dir: str, store: Store | None = None
+) -> DataFrame:
     """knn_graph_wide under a PER-SOURCE confirm budget, candidates
     ranked by a FIXED-WIDTH RANKING SKETCH — signature-distance
     re-ranking (the SimHash-hamming ordering of Manku et al., WWW
@@ -1244,18 +1267,17 @@ def knn_graph_wide_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, oracle-replayable), and ONLY the capped set joins
     the vector table for cosines: N x cap confirms instead of one per
     distinct candidate (~20x fewer at the 100x probe's density).
-    Capped-away volume is observable via knn_graph_candidate_overflow."""
-    sigs, masks, source = _srp_wide_sigs_tagged(spark, sf_dir)
+    Capped-away volume is observable via knn_graph_candidate_overflow.
+    store: as _srp_wide_sigs_tagged."""
+    sigs, masks, source = _srp_wide_sigs_tagged(spark, sf_dir, store)
     if source == "live":
         slim = _knn_slim_memo(spark, sf_dir, source, sigs)
     else:
-        # store-backed: the persisted srp_sigs_wide artifact carries rs
-        # as a column (r13), so slim is a plain watermark-filtered read
-        # — executor-loss-safe (recompute = re-read, no localCheckpoint
+        # store-backed: the persisted srp_sigs_wide rows carry rs as a
+        # column (r13), so slim is a plain watermark-filtered read —
+        # executor-loss-safe (recompute = re-read, no localCheckpoint
         # lineage truncation) and nothing to memoize
-        from .index_store import _slim_wide_from_store
-
-        slim = _slim_wide_from_store(spark, sf_dir)
+        slim = sigs.select("vec_id", "table_id", "sig", "rs")
     return _knn_graph_capped_from_sigs(sigs, masks, KNN_CAND_CAP, slim=slim)
 
 
@@ -1396,7 +1418,9 @@ def knn_graph_candidate_overflow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def embedding_neardup_pairs(
+    spark: SparkSession, sf_dir: str, store: Store | None = None
+) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the dedup family's
     embedding variant): candidate pairs share an SRP-LSH bucket in at
     least one of SRP_TABLES hash tables, then confirm cosine >=
@@ -1411,17 +1435,17 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus count (srp_bits_for — one cheap count() scan) so bucket
     population stays ~constant at any scale; the oracle computes the
     identical width from count(embeddings), so verification holds at
-    every scale factor, not just sf0.01."""
-    from .index_store import _read_artifact, persisted_root
+    every scale factor, not just sf0.01.
 
-    root = persisted_root(spark, sf_dir, "vecs")
-    if root:  # warm environment: persisted partitionBy(table_id) signatures,
-        # read through the watermark filter like every other persisted
-        # reader (a raw read here would ingest a concurrent/crashed
-        # refresh's uncommitted above-watermark partitions — phantom or
-        # duplicate pairs, ADVICE r8)
+    store: read the persisted partitionBy(table_id) signatures from it
+    (the *_from_index twin passes one); None lets index_store.store_for
+    decide."""
+    from .index_store import store_for
+
+    store = store or store_for(spark, sf_dir, "vecs")
+    if store:  # warm environment: the width is frozen in the manifest
         return _srp_pairs_from_sigs(
-            _read_artifact(spark, root, "srp_sigs").select("vec_id", "v", "table_id", "sig")
+            store.read(spark, "srp_sigs").select("vec_id", "v", "table_id", "sig")
         )
     return _srp_pairs_from_sigs(_srp_signature_table(spark, sf_dir))
 
@@ -1610,50 +1634,49 @@ def embedding_neardup_multiprobe_band(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-def _srp_wide_sigs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[int]]:
+def _srp_wide_sigs(
+    spark: SparkSession, sf_dir: str, store: Store | None = None
+) -> tuple[DataFrame, list[int]]:
     """(sigs, masks) for the WIDE governor layout — see
     _srp_wide_sigs_tagged for the branch logic; consumers that don't
     key a memo on the signature source use this two-tuple form."""
-    sigs, masks, _source = _srp_wide_sigs_tagged(spark, sf_dir)
+    sigs, masks, _source = _srp_wide_sigs_tagged(spark, sf_dir, store)
     return sigs, masks
 
 
 def _srp_wide_sigs_tagged(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store | None = None
 ) -> tuple[DataFrame, list[int], str]:
     """(sigs, masks, source) for the WIDE governor layout —
     srp_tables_for(bits) tables, hamming<=SRP_WIDE_RADIUS probe masks.
     Reads the persisted partitionBy(table_id) `srp_sigs_wide` artifact
-    when the index store carries it (warm environment; width frozen in
-    the manifest), else derives live and localCheckpoints. ONE provider
-    shared by every wide-layout consumer
+    of `store`, or of the store index_store.store_for picks when store
+    is None (warm environment; width frozen in the manifest; the rows
+    also carry the `rs` ranking sketch), else derives live and
+    localCheckpoints. ONE provider shared by every wide-layout consumer
     (embedding_neardup_multiprobe_wide, knn_graph_wide,
     semantic_decontaminate_wide) so the layout and the probe masks can
     never drift between screens.
 
-    `source` describes the sigs ACTUALLY RETURNED —
-    `store:{root}:{vec_watermark}` or `live` — derived from the SAME
-    persisted_root decision that picked the branch (ADVICE r12: a
-    second independent persisted_root call could flip between the sig
-    resolution and the memo-key derivation, caching store-derived rows
-    under the live key), and on the store branch from the same manifest
-    read whose watermark filtered the rows, so source-keyed memos
-    always describe the relation they hold."""
-    from .index_store import _wide_sigs_from_store, persisted_root
+    `source` describes the sigs ACTUALLY RETURNED — the store's
+    `store:{root}:{vec_watermark}` tag or `live` — from the ONE
+    store_for decision that picked the branch (ADVICE r12: a second
+    independent decision could flip between the sig resolution and the
+    memo-key derivation, caching store-derived rows under the live
+    key), and on the store branch from the same manifest snapshot whose
+    watermark filtered the rows, so source-keyed memos always describe
+    the relation they hold."""
+    from .index_store import store_for
 
-    if persisted_root(spark, sf_dir, "vecs"):
-        # warm environment: persisted_root runs through ensure_index,
-        # whose layout guard rebuilds any pre-r13 store — a non-None
-        # root always carries the current wide artifact
-        return _wide_sigs_from_store(spark, sf_dir)
+    store = store or store_for(spark, sf_dir, "vecs")
+    if store:
+        sigs = store.read(spark, "srp_sigs_wide").select("vec_id", "v", "table_id", "sig", "rs")
+        return sigs, _srp_probe_masks(store.manifest["srp_bits"], SRP_WIDE_RADIUS), store.tag
     # live path memoized per (application, corpus) — the shingle-set
     # discipline (r12): six wide-layout consumers each re-counted the
     # corpus and re-materialized the checkpoint per CALL, so bench warm
     # passes paid the full sig build again and the session accumulated
     # one orphan checkpoint per query run.
-    # persisted_root's own (session, corpus-signature) freshness memo
-    # guards the store-vs-live branch above; the live memo keys the same
-    # way and a corpus swap means a new sf_dir in this harness.
 
     def build() -> tuple[DataFrame, list[int]]:
         emb = load_table_spread(spark, sf_dir, "embeddings")
@@ -1684,7 +1707,9 @@ def _wide_sigs_live(corpus: DataFrame) -> tuple[DataFrame, list[int]]:
     return sigs, _srp_probe_masks(bits, SRP_WIDE_RADIUS)
 
 
-def embedding_neardup_multiprobe_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
+def embedding_neardup_multiprobe_wide(
+    spark: SparkSession, sf_dir: str, store: Store | None = None
+) -> DataFrame:
     """The production COMPUTE form of the governed near-dup screen: the
     same recall contract (SRP_TARGET_RECALL at SRP_DESIGN_COSINE) met
     by MORE TABLES AT RADIUS 1 instead of radius 2 on 4 tables — see
@@ -1700,8 +1725,9 @@ def embedding_neardup_multiprobe_wide(spark: SparkSession, sf_dir: str) -> DataF
     difference means the candidate set (and therefore the emitted pair
     set at the exploration floor) legitimately differs from the radius
     form's — the oracle replays these exact tables and masks, and the
-    planted-twin test pins the design-point contract."""
-    sigs, masks, source = _srp_wide_sigs_tagged(spark, sf_dir)
+    planted-twin test pins the design-point contract. store: as
+    _srp_wide_sigs_tagged."""
+    sigs, masks, source = _srp_wide_sigs_tagged(spark, sf_dir, store)
     return _multiprobe_pairs_from(
         sigs, masks, NEARDUP_COSINE,
         confirmed=_mp_confirmed_memo(spark, sf_dir, f"wide:{source}", sigs, masks),
@@ -1930,7 +1956,9 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def semantic_decontaminate_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
+def semantic_decontaminate_wide(
+    spark: SparkSession, sf_dir: str, store: Store | None = None
+) -> DataFrame:
     """semantic_decontaminate on the WIDE recall-governed layout — the
     production form of the benchmark-leakage screen (a missed
     contaminated document is the expensive failure mode here, so recall
@@ -1946,8 +1974,9 @@ def semantic_decontaminate_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     (corpus, bench) pair. Candidates are bare id pairs (slim-key
     discipline); vectors join back once per distinct pair — corpus
     vectors via one shuffle-free broadcast-probe join, bench vectors
-    broadcast again for the cosine confirm."""
-    sigs, masks = _srp_wide_sigs(spark, sf_dir)
+    broadcast again for the cosine confirm. store: as
+    _srp_wide_sigs_tagged."""
+    sigs, masks = _srp_wide_sigs(spark, sf_dir, store)
     return _sem_decon_wide_from_sigs(sigs, masks)
 
 
@@ -1965,15 +1994,17 @@ SEM_DECON_BAND_REVIEW = NEARDUP_BAND_COSINE   # 0.8 — review floor
 SEM_DECON_BAND_DROP = SRP_DESIGN_COSINE       # 0.9 — certain leak
 
 
-def semantic_decontaminate_band(spark: SparkSession, sf_dir: str) -> DataFrame:
+def semantic_decontaminate_band(
+    spark: SparkSession, sf_dir: str, store: Store | None = None
+) -> DataFrame:
     """The production EMIT form of the wide decontamination screen:
     same governed layout and recall contract as
     semantic_decontaminate_wide, review/drop thresholds at the design
     band instead of the exploration floor — the dense-corpus
     saturation (SCALE_100X.md r9) never materializes because
     sub-band cosines are filtered at the confirm, before the
-    per-vector window shuffle."""
-    sigs, masks = _srp_wide_sigs(spark, sf_dir)
+    per-vector window shuffle. store: as _srp_wide_sigs_tagged."""
+    sigs, masks = _srp_wide_sigs(spark, sf_dir, store)
     return _sem_decon_wide_from_sigs(
         sigs, masks,
         review_cosine=SEM_DECON_BAND_REVIEW,
@@ -2322,7 +2353,9 @@ def _pq_encoded_cells(
     )
 
 
-def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def ann_ivfpq_topk(
+    spark: SparkSession, sf_dir: str, store: Store | None = None
+) -> DataFrame:
     """IVF-PQ (the production FAISS composite, both scale levers at
     once): the trained coarse quantizer prunes the SEARCH SPACE — a
     query touches only its nearest cell's inverted list, a
@@ -2333,30 +2366,57 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank. Same memoized quantizer as ann_ivf_topk, same memoized
     codebooks as ann_pq_adc; the PQ encode runs AFTER the probe join,
     so only probed-cell rows evaluate it (at scale codes are
-    precomputed at write time alongside the cell assignment)."""
-    corpus, queries = _ivf_corpus_queries(spark, sf_dir)
-    cent = _ivf_cached_centroids(spark, sf_dir, corpus)
-    books = _pq_cached_codebooks(spark, sf_dir, corpus)
-    enc = _pq_encoded_cells(spark, sf_dir, corpus, cent, books)
+    precomputed at write time alongside the cell assignment).
+
+    store (the *_from_index twin): the cells and the PQ code words are
+    read from their co-partitioned partitionBy(cell) tables and the
+    probed rows reconstructed from the STORED codes by a literal-map
+    lookup of the manifest codebooks (no distance computation at read
+    time); the ADC shortlist then joins back to the full-precision
+    cells rows for the exact rerank. None derives live."""
+    cells, queries, cent = _ivf_inputs(spark, sf_dir, store)
+    if store:
+        enc = store.read(spark, "pq_codes").select("corpus_id", "codes", "cell")
+    else:
+        corpus = _ivf_corpus_queries(spark, sf_dir)[0]
+        books = _pq_cached_codebooks(spark, sf_dir, corpus)
+        enc = _pq_encoded_cells(spark, sf_dir, corpus, cent, books)
     probed = _probe_cells(queries, cent, 1).select(
         "query_id", "q_emb", "q_norm", F.col("cell").alias("probe_cell")
     )
     with_recon = enc.join(F.broadcast(probed), enc.cell == probed.probe_cell, "inner")
+    if store:
+        recon = _pq_recon_from_codes(store.manifest["pq_books"], F.col("codes"))
+        with_recon = with_recon.withColumn("r_emb", recon)
     adc = F.round(
         _dot(F.col("q_emb"), F.col("r_emb")) / (F.col("q_norm") * _norm(F.col("r_emb"))), 6
     )
     wc = Window.partitionBy("query_id").orderBy(F.desc("adc_cosine"), F.asc("corpus_id"))
+    exact_src = [] if store else ["c_emb", "c_norm"]
     shortlist = (
-        with_recon.select("query_id", "probe_cell", "corpus_id", "c_emb", "c_norm", "q_emb", "q_norm", adc.alias("adc_cosine"))
+        with_recon.select("query_id", "probe_cell", "corpus_id", *exact_src, "q_emb", "q_norm", adc.alias("adc_cosine"))
         .withColumn("crank", F.row_number().over(wc))
         .filter(F.col("crank") <= PQ_SHORTLIST)
     )
+    rerank = shortlist
+    if store:
+        # rerank join keeps the cell equi-condition so the second
+        # ivf_cells read is ALSO pruned to the probed partition —
+        # without it the shortlist's corpus_id join scans every cell
+        # and rerank cost grows with the corpus
+        rerank = shortlist.join(
+            cells,
+            (shortlist.corpus_id == cells.corpus_id) & (shortlist.probe_cell == cells.cell),
+        )
     exact = F.round(
         _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm")), 6
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
     return (
-        shortlist.select("query_id", "probe_cell", "corpus_id", "adc_cosine", exact.alias("cosine"))
+        rerank.select(
+            shortlist.query_id, "probe_cell", shortlist.corpus_id,
+            "adc_cosine", exact.alias("cosine"),
+        )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "probe_cell", "rank", "corpus_id", "cosine", "adc_cosine")

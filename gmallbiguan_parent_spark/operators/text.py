@@ -14,12 +14,17 @@ computed in decimal and rounded to fixed scale so hashes match.
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import tokenize
 from ..io import load_table, load_table_spread
 from ..memo import session_memo
+
+if TYPE_CHECKING:
+    from .index_store import Store
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
 
@@ -1149,7 +1154,9 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
 BPE_DOC_MOD = 10
 
 
-def bpe_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+def bpe_doc_tokens(
+    spark: SparkSession, sf_dir: str, store: Store | None = None
+) -> DataFrame:
     """Document-level tokenizer application: per doc, word count vs
     BPE-piece count and the compression ratio — the token-budget
     numbers an epoch planner needs AFTER training a tokenizer (char
@@ -1159,8 +1166,11 @@ def bpe_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> n_pieces), so the merge chain never re-runs per corpus token —
     one explode, one vocab-keyed join (vocab is small: broadcast), one
     doc-keyed aggregate. This is how a trained tokenizer is applied in
-    production: segment the vocab once, look up."""
-    _, vocab = _bpe_train(spark, sf_dir)
+    production: segment the vocab once, look up.
+
+    store: read the trained apply table from it (the *_from_index twin
+    passes one) instead of training; None trains live."""
+    vocab = store.read(spark, "bpe_vocab") if store else _bpe_train(spark, sf_dir)[1]
     pieces = vocab.select(
         "tok", F.size(F.split(F.trim(F.col("syms")), " ")).alias("n_pieces")
     )

@@ -3,6 +3,8 @@ parameters, watermark idempotence, and from_index/in-session parity."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from gmallbiguan_parent_spark import memo
@@ -470,7 +472,7 @@ def test_compact_ledger_resume_after_partial_deletes(spark, tmp_path):
 def test_base_queries_read_persisted_store_when_env_set(spark, tmp_path, monkeypatch):
     """VERDICT r7 #7: with SPARK_GRAFT_INDEX_DIR set, the BASE
     neardup/ANN queries default to the persisted store — same rows as
-    the cold in-session derivation, and persisted_root returns the
+    the cold in-session derivation, and store_for returns the
     published root (None when unset or for non-carried families)."""
     import os
 
@@ -479,13 +481,13 @@ def test_base_queries_read_persisted_store_when_env_set(spark, tmp_path, monkeyp
 
     monkeypatch.delenv("SPARK_GRAFT_INDEX_DIR", raising=False)
     memo.clear("index_root")
-    assert ix.persisted_root(spark, SF_DIR, "docs") is None
+    assert ix.store_for(spark, SF_DIR, "docs") is None
     cold = sorted(map(tuple, minhash_lsh_pairs(spark, SF_DIR).collect()))
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "warm"))
     memo.clear("index_root")
-    root = ix.persisted_root(spark, SF_DIR, "docs")
-    assert root and os.path.exists(f"{root}/{ix.MANIFEST}")
+    store = ix.store_for(spark, SF_DIR, "docs")
+    assert store and os.path.exists(f"{store.root}/{ix.MANIFEST}")
     warm = sorted(map(tuple, minhash_lsh_pairs(spark, SF_DIR).collect()))
     assert warm == cold and len(warm) > 0
     memo.clear("index_root")
@@ -494,7 +496,7 @@ def test_base_queries_read_persisted_store_when_env_set(spark, tmp_path, monkeyp
 def test_persisted_root_stale_store_falls_back(spark, tmp_path, monkeypatch):
     """r8 review finding: a warm store whose corpus has grown past the
     manifest watermark must NOT serve (it would silently omit every
-    pair involving the new rows) — persisted_root returns None until a
+    pair involving the new rows) — store_for returns None until a
     maintenance refresh catches the store up."""
     import os
 
@@ -509,20 +511,21 @@ def test_persisted_root_stale_store_falls_back(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     memo.clear("index_root")
     memo.clear("fresh")
-    root = ix.persisted_root(spark, str(corpus), "docs")
-    assert root is not None
+    store = ix.store_for(spark, str(corpus), "docs")
+    assert store is not None
+    root = store.root
 
     spark.createDataFrame(
         [(10**7, "zz brand new document text", "en", "web", 26)],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.mode("append").parquet(str(corpus / "documents.parquet"))
     memo.clear("fresh")
-    assert ix.persisted_root(spark, str(corpus), "docs") is None, (
+    assert ix.store_for(spark, str(corpus), "docs") is None, (
         "stale store must not serve the warm path"
     )
     ix.refresh_index(spark, str(corpus), root)
     memo.clear("fresh")
-    assert ix.persisted_root(spark, str(corpus), "docs") == root
+    assert ix.store_for(spark, str(corpus), "docs").root == root
     memo.clear("index_root")
     memo.clear("fresh")
 
@@ -558,8 +561,9 @@ open(f"{go}.ready.{tag}", "w").close()
 while not os.path.exists(go):   # barrier: align the two builds
     time.sleep(0.05)
 root = ix.ensure_index(spark, "%s", families=("docs",))
-rows = ix._read_artifact(spark, root, "shingle_sets").count()
-bands = ix._read_artifact(spark, root, "minhash_bands").count()
+store = ix.Store(root, ix.read_manifest(root))
+rows = store.read(spark, "shingle_sets").count()
+bands = store.read(spark, "minhash_bands").count()
 print(json.dumps({"root": root, "rows": rows, "bands": bands}))
 spark.stop()
 """
@@ -648,26 +652,21 @@ def test_compact_preserves_wide_artifact_under_asymmetric_watermarks(
     """compact_index folds each artifact into ingest=<family watermark>;
     a hand-listed membership tuple once gave srp_sigs_wide the DOC
     watermark, so on a corpus where doc_wm > vec_wm the compacted wide
-    partition sat ABOVE the vec watermark and _read_artifact filtered
+    partition sat ABOVE the vec watermark and the reader filtered
     the entire artifact out — silent empty reads after maintenance,
     masked on corpora where the two watermarks coincide. Pin the fix:
     membership comes from _VEC_ARTIFACT_SET, the same set the reader
-    uses."""
+    (Store.read) uses."""
     from gmallbiguan_parent_spark.operators import index_store as ix
 
     root = str(tmp_path / "asym")
     ix.build_index(spark, SF_DIR, root, vec_pred=F.col("vec_id") <= DOC_WM)
     m = ix.read_manifest(root)
     assert m["doc_watermark"] > m["vec_watermark"]  # the masking condition broken
-    before = {
-        name: ix._read_artifact(spark, root, name).count()
-        for name in ix._COMPACT_PARTS
-    }
+    store = ix.Store(root, m)
+    before = {name: store.read(spark, name).count() for name in ix._COMPACT_PARTS}
     ix.compact_index(spark, root)
-    after = {
-        name: ix._read_artifact(spark, root, name).count()
-        for name in ix._COMPACT_PARTS
-    }
+    after = {name: store.read(spark, name).count() for name in ix._COMPACT_PARTS}
     assert after == before, f"compaction changed visible rows: {before} -> {after}"
 
 
@@ -703,7 +702,7 @@ def test_crashed_wide_compaction_heals_without_rebuild(spark, tmp_path, monkeypa
 def test_persisted_root_never_takes_over_old_layout(spark, tmp_path, monkeypatch):
     """ADVICE r9: the warm-path switch is a pure READ path — when the
     shared root carries a PREVIOUS engine version's layout (published
-    manifest, missing a current-code artifact), persisted_root must
+    manifest, missing a current-code artifact), store_for must
     return None (live derivation) and leave the store byte-untouched,
     instead of letting ensure_index rebuild and atomically swap a root
     that version's maintenance jobs may be working on. The upgrade
@@ -722,8 +721,8 @@ def test_persisted_root_never_takes_over_old_layout(spark, tmp_path, monkeypatch
 
     memo.clear("index_root")  # new application
     memo.clear("fresh")
-    assert ix.persisted_root(spark, SF_DIR, "vecs") is None
-    assert ix.persisted_root(spark, SF_DIR, "docs") is None
+    assert ix.store_for(spark, SF_DIR, "vecs") is None
+    assert ix.store_for(spark, SF_DIR, "docs") is None
     # the reader neither rebuilt the missing artifact nor republished
     assert not os.path.isdir(f"{root}/srp_sigs_wide")
     assert os.path.getmtime(f"{root}/{ix.MANIFEST}") == manifest_mtime
@@ -740,13 +739,14 @@ def test_wide_store_tag_names_the_watermark_that_filtered_the_rows(
     import pyarrow.parquet as pq
 
     import gmallbiguan_parent_spark.operators.index_store as ix
+    from gmallbiguan_parent_spark.operators.similarity import _srp_wide_sigs_tagged
 
     root = tmp_path / "store"
     (root / "srp_sigs_wide").mkdir(parents=True)
     ids = list(range(21))
     pq.write_table(
         pa.table({
-            "vec_id": ids, "v": [[1.0]] * 21, "table_id": [0] * 21,
+            "vec_id": ids, "v": [[1.0]] * 21, "rs": [0] * 21, "table_id": [0] * 21,
             "sig": [0] * 21, "ingest": ids,
         }),
         root / "srp_sigs_wide" / "part-0.parquet",
@@ -757,10 +757,170 @@ def test_wide_store_tag_names_the_watermark_that_filtered_the_rows(
         reads.append(1)
         return {"vec_watermark": 9 + len(reads), "srp_bits": 4}
 
-    monkeypatch.setattr(ix, "ensure_index", lambda _spark, _sf: str(root))
+    monkeypatch.setattr(ix, "ensure_index", lambda *_a, **_k: str(root))
     monkeypatch.setattr(ix, "read_manifest", rising_manifest)
-    sigs, _masks, source = ix._wide_sigs_from_store(spark, "/corpus")
+    store = ix.store_for(spark, "/corpus", "vecs", require=True)
+    sigs, _masks, source = _srp_wide_sigs_tagged(spark, "/corpus", store)
     tag_wm = int(source.rsplit(":", 1)[1])
     assert source == f"store:{root}:{tag_wm}"
     assert sigs.agg(F.max("vec_id")).first()[0] == tag_wm
     assert len(reads) == 1
+
+
+# the base queries that read the store when SPARK_GRAFT_INDEX_DIR is set
+STORE_SWITCHED_BASE_OPS = (
+    "minhash_lsh_pairs", "simhash_neardup_pairs", "simhash_pairs_capped",
+    "simhash_bucket_overflow", "ann_ivf_topk", "embedding_neardup_pairs",
+    "knn_graph_wide", "knn_graph_wide_capped", "knn_graph_candidate_overflow",
+    "embedding_neardup_multiprobe_wide", "embedding_neardup_wide_band",
+    "semantic_decontaminate_wide", "semantic_decontaminate_band",
+)
+
+
+def _hand_written_store(root, families, **manifest):
+    """A current-layout store at root, written with pyarrow: a manifest
+    plus one single-row file per artifact of `families` under ingest=0
+    (and its partition column), enough to build every reader's plan."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import gmallbiguan_parent_spark.operators.index_store as ix
+    from gmallbiguan_parent_spark.operators.similarity import PQ_M, PQ_SUB, SRP_DIM
+
+    v = [0.5] * SRP_DIM
+    rows = {
+        "shingle_sets": ({"doc_id": [0], "s": [["a b c"]]}, None),
+        "minhash_bands": ({"doc_id": [0], "band_key": ["1:2:3"]}, "band_id"),
+        "simhash_fp": ({"doc_id": [0], "sim_hi": [0], "sim_lo": [0]}, None),
+        "bpe_vocab": ({"tok": ["ab"], "syms": ["a b"]}, None),
+        "ivf_cells": ({"corpus_id": [0], "c_emb": [v], "c_norm": [1.0]}, "cell"),
+        "pq_codes": ({"corpus_id": [0], "codes": [[0] * PQ_M]}, "cell"),
+        "srp_sigs": ({"vec_id": [0], "v": [v], "sig": [0]}, "table_id"),
+        "srp_sigs_wide": ({"vec_id": [0], "v": [v], "rs": [0], "sig": [0]}, "table_id"),
+    }
+    for fam in families:
+        for name in ix._FAMILY_ARTIFACTS[fam]:
+            cols, part = rows[name]
+            d = os.path.join(root, name, "ingest=0", f"{part}=0" if part else "")
+            os.makedirs(d)
+            pq.write_table(pa.table(cols), os.path.join(d, "part-0.parquet"))
+    (Path(root) / ix.MANIFEST).write_text(json.dumps({
+        "layout": ix._LAYOUT_VERSION, "families": list(families),
+        "doc_watermark": 10**9, "vec_watermark": 10**9, "simhash_wide": False,
+        "srp_bits": 4, "centroids": [[0, v]],
+        "pq_books": [[[0, [0.5] * PQ_SUB]]] * PQ_M, "bpe_rules": [], **manifest,
+    }))
+
+
+def test_one_manifest_read_per_store_query(spark, tmp_path, monkeypatch):
+    """Each store-backed query reads its store's manifest exactly once —
+    every *_from_index twin, and every base query that switches to the
+    store under SPARK_GRAFT_INDEX_DIR — so one watermark filters all of
+    its artifacts. The stores are hand-written and the DataFrames are
+    built, never run."""
+    import gmallbiguan_parent_spark.operators.index_store as ix
+    from gmallbiguan_parent_spark.pipelines import all_queries
+
+    base = str(tmp_path / "idx")
+    _hand_written_store(ix._shared_root_path(base, SF_DIR, "full"), ix._ALL_FAMILIES)
+    _hand_written_store(
+        ix._shared_root_path(base, SF_DIR, "ref_even"), ("docs",), doc_scope=["mod", 2, 0]
+    )
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", base)
+    memo.clear("index_root")
+    # prime: adopt both stores and compute the freshness verdicts
+    ix.ensure_index(spark, SF_DIR, "ref_even")
+    assert ix.store_for(spark, SF_DIR, "docs") and ix.store_for(spark, SF_DIR, "vecs")
+    reads = []
+    real_read = ix.read_manifest
+    monkeypatch.setattr(ix, "read_manifest", lambda root: reads.append(root) or real_read(root))
+    queries = all_queries()
+    names = [n for n in ix.QUERIES if n.endswith("_from_index")]
+    counts = {}
+    for name in names + list(STORE_SWITCHED_BASE_OPS):
+        reads.clear()
+        queries[name](spark, SF_DIR)
+        counts[name] = len(reads)
+    memo.clear("index_root")
+    assert counts == dict.fromkeys(counts, 1) and len(counts) == 26
+
+
+def test_store_serves_again_after_in_session_refresh(spark, tmp_path, monkeypatch):
+    """A store that went stale because the corpus grew serves again as
+    soon as refresh_index catches it up in the same session: the
+    freshness verdict is versioned on the manifest watermark as well as
+    on the corpus listing, so no memo has to be cleared by hand."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    import gmallbiguan_parent_spark.operators.index_store as ix
+
+    corpus = tmp_path / "corpus"
+    (corpus / "documents.parquet").mkdir(parents=True)
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet")
+    pq.write_table(docs, corpus / "documents.parquet" / "part-0.parquet")
+    shutil.copy(f"{SF_DIR}/embeddings.parquet", corpus / "embeddings.parquet")
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
+    memo.clear("index_root")
+    root = ix.ensure_index(spark, str(corpus), families=("docs",))
+    assert ix.store_for(spark, str(corpus), "docs").root == root
+
+    grown = docs.slice(0, 1)
+    grown = grown.set_column(
+        grown.schema.get_field_index("doc_id"), "doc_id",
+        pc.add(grown["doc_id"], 10**7),
+    )
+    pq.write_table(grown, corpus / "documents.parquet" / "part-1.parquet")
+    assert ix.store_for(spark, str(corpus), "docs") is None
+    ix.refresh_index(spark, str(corpus), root)
+    assert ix.store_for(spark, str(corpus), "docs").root == root
+    memo.clear("index_root")
+
+
+def test_store_without_the_family_fails_loud(spark, tmp_path, monkeypatch):
+    """A *_from_index twin over a store built without its family raises
+    a ValueError naming the root and the family, before any Spark job —
+    not a parquet path-not-found error from the missing artifact.
+    ensure_index memoizes on (corpus, variant), not on families, so a
+    ("docs", "bpe") store can be the one a vecs twin finds."""
+    import json
+
+    import pytest
+
+    import gmallbiguan_parent_spark.operators.index_store as ix
+
+    root = tmp_path / "store"
+    root.mkdir()
+    (root / ix.MANIFEST).write_text(json.dumps({
+        "families": ["docs", "bpe"], "doc_watermark": 9, "vec_watermark": None,
+        "centroids": [], "pq_books": [], "bpe_rules": [],
+    }))
+    monkeypatch.setattr(ix, "ensure_index", lambda *_a, **_k: str(root))
+    with pytest.raises(ValueError, match=f"{root}.*'vecs'"):
+        ix.ann_ivf_topk_from_index(spark, "/corpus")
+    assert ix.store_for(spark, "/corpus", "bpe", require=True).root == str(root)
+
+
+def test_store_internals_stay_in_index_store():
+    """index_store.store_for is the only store access outside
+    operators/index_store.py: no other module of the package names the
+    store's root, manifest or artifact readers."""
+    import re
+    from pathlib import Path
+
+    import gmallbiguan_parent_spark
+
+    internals = re.compile(r"\b(persisted_root|ensure_index|read_manifest|_read_artifact)\b")
+    pkg = Path(gmallbiguan_parent_spark.__file__).parent
+    found = [
+        f"{path.relative_to(pkg).as_posix()}: {m.group(0)}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).as_posix() != "operators/index_store.py"
+        for m in internals.finditer(path.read_text())
+    ]
+    assert found == []

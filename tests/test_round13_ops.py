@@ -64,7 +64,7 @@ def test_pre_v2_layout_store_upgraded_on_ensure(spark, tmp_path, monkeypatch):
     """A store published by a pre-r13 engine (manifest without the
     layout key → version 1, srp_sigs_wide without rs) must fail
     _layout_current and take the ensure_index swap-upgrade path; after
-    the upgrade the rs-reading capped twin serves. persisted_root must
+    the upgrade the rs-reading capped twin serves. store_for must
     meanwhile serve live (None), never mutate the old store."""
     import gmallbiguan_parent_spark.operators.index_store as ix
 
@@ -82,11 +82,12 @@ def test_pre_v2_layout_store_upgraded_on_ensure(spark, tmp_path, monkeypatch):
 
     memo.clear("index_root")  # new application
     memo.clear("fresh")
-    assert ix.persisted_root(spark, SF_DIR, "vecs") is None  # reader: live
+    assert ix.store_for(spark, SF_DIR, "vecs") is None  # reader: live
     root2 = ix.ensure_index(spark, SF_DIR)  # index path: swap-upgrade
     assert root2 == root
     assert ix.read_manifest(root)["layout"] == ix._LAYOUT_VERSION
-    assert "rs" in ix._slim_wide_from_store(spark, SF_DIR).columns
+    store = ix.store_for(spark, SF_DIR, "vecs", require=True)
+    assert "rs" in store.read(spark, "srp_sigs_wide").columns
     assert ix.knn_graph_capped_from_index(spark, SF_DIR).count() > 0
 
 

@@ -80,7 +80,7 @@ def test_multiprobe_band_cuts_floor_tail_and_keeps_design_pairs(spark, tmp_path)
 
 def test_persisted_root_sees_mid_session_corpus_growth(spark, tmp_path, monkeypatch):
     """ADVICE r8: the staleness verdict must not be pinned for the whole
-    session — growing the corpus after a warm query flips persisted_root
+    session — growing the corpus after a warm query flips store_for
     to None on the NEXT query (no silent omission of new rows)."""
     import shutil
 
@@ -94,8 +94,8 @@ def test_persisted_root_sees_mid_session_corpus_growth(spark, tmp_path, monkeypa
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     memo.clear("index_root")
     memo.clear("fresh")
-    root = index_store.persisted_root(spark, str(sf), "vecs")
-    assert root is not None  # fresh build adopted
+    store = index_store.store_for(spark, str(sf), "vecs")
+    assert store is not None  # fresh build adopted
     # grow the corpus: append one vector past the manifest watermark
     grown = spark.read.parquet(str(sf / "embeddings.parquet"))
     extra = grown.limit(1).select(
@@ -109,7 +109,7 @@ def test_persisted_root_sees_mid_session_corpus_growth(spark, tmp_path, monkeypa
     )
     (sf / "embeddings.parquet").unlink()
     shutil.move(str(sf / "embeddings_new.parquet"), str(sf / "embeddings.parquet"))
-    assert index_store.persisted_root(spark, str(sf), "vecs") is None, (
+    assert index_store.store_for(spark, str(sf), "vecs") is None, (
         "stale store served after mid-session corpus growth"
     )
 
